@@ -3,8 +3,10 @@
 The reference persists results as one JSON object per store —
 ``{"word": [offsets...], ...}`` (database_server.py:88-116 writes it,
 driver.py:144 scp's it home; /root/reference/solution_database.json is
-the packaged example).  This module makes that format a first-class
-Spark source/sink via the Spark 4 Python DataSource API
+the packaged example, and the repo-root solution_database.json is the
+same store as written by tools/run_job.py, postings sorted).  This
+module makes that format a first-class Spark source/sink via the
+Spark 4 Python DataSource API
 (pyspark.sql.datasource), so a reference user can
 ``spark.read.format("kvjson").load(path)`` their existing stores:
 

@@ -9,6 +9,8 @@ from distributedmapreduce_spark.operators.kvstore import SolutionStore
 from distributedmapreduce_spark.sources.io import WRITE_FORMATS, read_table, write_table
 from distributedmapreduce_spark.sources.testdata import load_table
 
+from .reference_replay import needs_reference_input
+
 
 def test_solution_store_upsert_and_lookup(spark, tmp_path):
     store = SolutionStore(spark, str(tmp_path / "store"), key_col="word")
@@ -46,6 +48,7 @@ def test_format_round_trip(spark, tmp_path, fmt):
     assert back.schema == src.schema
 
 
+@needs_reference_input
 def test_job_rerun_upserts_idempotently(spark, tmp_path):
     """Reference lifecycle: re-running a job against the same solution
     store overwrites per key (database_server.py:88-102) — the store

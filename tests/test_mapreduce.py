@@ -9,6 +9,8 @@ import pytest
 from distributedmapreduce_spark.operators import mapreduce as MR
 from distributedmapreduce_spark.operators import text as T
 
+from .reference_replay import needs_reference_input
+
 
 @pytest.fixture(scope="module")
 def ref_lines(spark):
@@ -16,6 +18,7 @@ def ref_lines(spark):
     return T.lines(raw).cache()
 
 
+@needs_reference_input
 def test_facade_word_count_matches_dataframe(spark, ref_lines):
     facade = {r.word: r["count"] for r in MR.word_count_job(ref_lines).collect()}
     native = {
@@ -24,6 +27,7 @@ def test_facade_word_count_matches_dataframe(spark, ref_lines):
     assert facade == native
 
 
+@needs_reference_input
 def test_facade_inverted_index_matches_dataframe(spark, ref_lines):
     facade = {
         r.word: list(r.postings)

@@ -9,7 +9,10 @@ from pyspark.sql import functions as F
 
 from distributedmapreduce_spark.operators import text as T
 
+from .reference_replay import needs_reference_input
 
+
+@needs_reference_input
 def test_length_hash_repartition(spark):
     raw = spark.read.text("/root/reference/input.txt")
     tok = T.pipeline(raw)

@@ -6,14 +6,18 @@ dispatch through the facade."""
 from __future__ import annotations
 
 import json
+import os
 import sys
 
-sys.path.insert(0, "/root/repo/tools")
+sys.path.insert(
+    0, os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "tools")
+)
 
 from run_job import run_spec  # noqa: E402
 
 from tests.reference_replay import (  # noqa: E402
     load_reference_input,
+    needs_reference_input,
     replay_inverted_index,
     replay_lines,
     replay_tokens,
@@ -25,6 +29,7 @@ def _golden_pairs():
     return replay_tokens(replay_lines(load_reference_input()))
 
 
+@needs_reference_input
 def test_inverted_index_spec_matches_golden(spark):
     spec = {
         "input_file_location": "/root/reference/input.txt",
@@ -40,6 +45,7 @@ def test_inverted_index_spec_matches_golden(spark):
     assert got == want
 
 
+@needs_reference_input
 def test_word_count_spec_matches_replay(spark):
     spec = {
         "input_file_location": "/root/reference/input.txt",
@@ -52,6 +58,7 @@ def test_word_count_spec_matches_replay(spark):
     assert got == replay_word_count(_golden_pairs())
 
 
+@needs_reference_input
 def test_arbitrary_python_spec(spark, tmp_path):
     mapper = tmp_path / "my_mapper.py"
     mapper.write_text(

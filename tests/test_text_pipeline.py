@@ -11,7 +11,7 @@ from pyspark.sql import functions as F
 from distributedmapreduce_spark.operators import text as T
 
 from .reference_replay import (
-    load_reference_input,
+    needs_reference_input,
     replay_inverted_index,
     replay_lines,
     replay_tokens,
@@ -63,6 +63,7 @@ def reference_tokens(spark):
     return T.pipeline(raw).cache()
 
 
+@needs_reference_input
 def test_golden_inverted_index(spark, reference_tokens):
     """End-to-end parity with /root/reference/solution_database.json."""
     got = {
@@ -76,6 +77,7 @@ def test_golden_inverted_index(spark, reference_tokens):
     assert mismatches == []
 
 
+@needs_reference_input
 def test_golden_word_count(spark, reference_tokens):
     golden = json.load(open("/root/reference/solution_database.json"))
     got = {r.word: r["count"] for r in T.word_count(reference_tokens).collect()}
@@ -83,6 +85,7 @@ def test_golden_word_count(spark, reference_tokens):
     assert got == want
 
 
+@needs_reference_input
 def test_token_total(spark, reference_tokens):
     assert reference_tokens.count() == 31331
 
