@@ -50,15 +50,27 @@ def pair_dot(a, b) -> Column:
     of the query).  This form ships the two vectors through Arrow
     once and does the multiply-accumulate in numpy.
 
-    BIT-IDENTICAL to ``dot`` by construction: ``np.add.accumulate``
-    is defined as strict left-to-right sequential addition — the same
-    IEEE-754 evaluation order as the fold in ``dot`` and as DuckDB's
-    ``list_dot_product`` loop — so every oracle hash gate is
-    unaffected (a plain ``(A*B).sum(axis=1)`` uses pairwise summation
-    and measurably diverges in the last ulp; do not \"simplify\" to
-    it).  Use for pair-verify stages whose row count is
-    candidate-bounded; keep ``dot`` for tiny or output-sized frames
-    where a Python stage costs more than it saves."""
+    Precondition: both inputs are non-NULL arrays of one fixed
+    dimension >= 1 in every row (``np.stack`` needs equal lengths and
+    ``[:, -1]`` needs a last element).  Every current caller meets it:
+    each passes an embeddings-table vector column, fixed-dimension and
+    non-NULL.  NULL, ragged or zero-width input raises instead of
+    following ``dot``.
+
+    BIT-IDENTICAL to ``dot`` for non-zero accumulations:
+    ``np.add.accumulate`` is defined as strict left-to-right
+    sequential addition — the same IEEE-754 evaluation order as the
+    fold in ``dot`` and as DuckDB's ``list_dot_product`` loop — so
+    every oracle hash gate is unaffected (a plain
+    ``(A*B).sum(axis=1)`` uses pairwise summation and measurably
+    diverges in the last ulp; do not \"simplify\" to it).  The one
+    difference is the sign of a zero: ``dot`` seeds its fold with
+    +0.0, this form starts from the first product, so a result whose
+    every product is -0.0 comes out -0.0 here and +0.0 from ``dot``
+    (equal as values, different bits).  Use for pair-verify stages
+    whose row count is candidate-bounded; keep ``dot`` for tiny or
+    output-sized frames where a Python stage costs more than it
+    saves."""
     from pyspark.sql import SparkSession
 
     active = SparkSession.getActiveSession()

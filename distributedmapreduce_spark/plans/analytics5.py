@@ -17,6 +17,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
+from ..operators.simjoin import bucket_pairs
 from .core import EVENTS_US, query, t
 
 _KS_G0 = "1-URGENT"
@@ -2449,17 +2450,8 @@ def degree_assortativity_copurchase(
         .select("p")
     )
     cpr = cp.join(F.broadcast(rare), "p")
-    e = (
-        cpr.select("p", F.col("c").alias("u"))
-        .join(
-            cpr.select("p", F.col("c").alias("v")),
-            "p",
-        )
-        .filter(F.col("u") < F.col("v"))
-        .select("u", "v")
-        .distinct()
-        .persist()  # edge list: degrees + point pairs
-    )
+    # edge list, persisted: degrees + point pairs
+    e = bucket_pairs(cpr, "c", "u", "v", on=("p",)).persist()
     deg = (
         e.select(F.col("u").alias("node"))
         .unionByName(e.select(F.col("v").alias("node")))

@@ -1570,41 +1570,54 @@ def curation_pipeline_v4(spark: SparkSession, sf: str) -> DataFrame:
 
     from concurrent.futures import ThreadPoolExecutor
 
-    pool = ThreadPoolExecutor(max_workers=len(sig2))
-    panels = [pool.submit(_mat, col) for col in sig2]
-
-    # spread before the per-shingle 9x-md5 explode: AQE coalesces
-    # k2's tiny keeper shuffle to ONE partition at bench scale, which
-    # serialized the signature map side on a single core (the probe
-    # is cheap — k2 is a checkpoint leaf)
-    msig = _pmh_signatures(
-        spread(k2.select("doc_id", "text"))
-    ).localCheckpoint(eager=False)
-    cand = _pmh_candidates(msig, persist_bands=False)
-    a = msig.select(F.col("doc_id").alias("doc_a"), F.col("hs").alias("ha"))
-    b = msig.select(F.col("doc_id").alias("doc_b"), F.col("hs").alias("hb"))
-    mdrops = (
-        cand.join(a, "doc_a")
-        .join(b, "doc_b")
-        .select("doc_b", _pmh_jac_e6().alias("jac_e6"))
-        .filter(F.col("jac_e6") >= _PMH_TAU_E6)
-        .select(F.col("doc_b").alias("doc_id"))
-        .distinct()
+    pool = ThreadPoolExecutor(
+        max_workers=len(sig2), thread_name_prefix="v4-panel"
     )
-    # ``text`` is consumed by msig above and never again — dropping it
-    # here keeps the document payload out of the three keeper-stage
-    # exchanges below (guide §2.3: project before the exchange)
-    k3 = (
-        k2.join(mdrops, "doc_id", "left_anti")
-        .select("doc_id", "n_tokens", "n_distinct")
-        .localCheckpoint(eager=False)
-    )
+    # the finally joins every panel thread on any exit, so a failed
+    # panel (or a failure on the main thread) never leaves the other
+    # panels submitting jobs after the query has unwound
+    try:
+        panels = [pool.submit(_mat, col) for col in sig2]
 
-    # join the decode panels: every sig2 frame is cached past here, so
-    # the keeper bookkeeping below never touches a decode again
-    for p in panels:
-        p.result()
-    pool.shutdown()
+        # spread before the per-shingle 9x-md5 explode: AQE coalesces
+        # k2's tiny keeper shuffle to ONE partition at bench scale,
+        # which serialized the signature map side on a single core
+        # (the probe is cheap — k2 is a checkpoint leaf)
+        msig = _pmh_signatures(
+            spread(k2.select("doc_id", "text"))
+        ).localCheckpoint(eager=False)
+        cand = _pmh_candidates(msig, persist_bands=False)
+        a = msig.select(
+            F.col("doc_id").alias("doc_a"), F.col("hs").alias("ha")
+        )
+        b = msig.select(
+            F.col("doc_id").alias("doc_b"), F.col("hs").alias("hb")
+        )
+        mdrops = (
+            cand.join(a, "doc_a")
+            .join(b, "doc_b")
+            .select("doc_b", _pmh_jac_e6().alias("jac_e6"))
+            .filter(F.col("jac_e6") >= _PMH_TAU_E6)
+            .select(F.col("doc_b").alias("doc_id"))
+            .distinct()
+        )
+        # ``text`` is consumed by msig above and never again —
+        # dropping it here keeps the document payload out of the three
+        # keeper-stage exchanges below (guide §2.3: project before the
+        # exchange)
+        k3 = (
+            k2.join(mdrops, "doc_id", "left_anti")
+            .select("doc_id", "n_tokens", "n_distinct")
+            .localCheckpoint(eager=False)
+        )
+
+        # join the decode panels: every sig2 frame is cached past
+        # here, so the keeper bookkeeping below never touches a decode
+        # again
+        for p in panels:
+            p.result()
+    finally:
+        pool.shutdown(wait=True, cancel_futures=True)
 
     def _sig_keeper(kin: DataFrame, s2: DataFrame, col: str) -> DataFrame:
         """Among kin's docs: keep min doc_id per identical signature;
@@ -1615,7 +1628,7 @@ def curation_pipeline_v4(spark: SparkSession, sf: str) -> DataFrame:
         NULL-modality window partition — guide §2.5 null hot key; no
         payload in the shuffle — §2.3), non-keeper duplicates become
         a doc_id drop list, survivors one left_anti join.  r14: the
-        sig table arrives pre-built over k3 and cached, so the semi
+        sig table arrives pre-built over k2 and cached, so the semi
         join restricts it to THIS stage's live set — identical
         keep-id aggregate, zero decode work in the keeper itself."""
         live = s2.join(kin.select("doc_id"), "doc_id", "left_semi")

@@ -29,6 +29,7 @@ from ..functions.vector import (  # noqa: F401
     pair_dot as _pair_dot,
 )
 from ..operators.index_store import cached_index, merge_index
+from ..operators.simjoin import band_buckets, bucket_pairs
 from .core import query, spread, t
 
 # --------------------------------------------------------------------------
@@ -213,18 +214,13 @@ def minhash_band_buckets(signatures: DataFrame) -> DataFrame:
     """(doc_id, band, bucket) — the LSH blocking stage of
     dedup_minhash_lsh."""
     per_band = len(_MINHASH_SEEDS) // _BANDS
-    return signatures.select(
-        "doc_id",
-        F.posexplode(
-            F.array(
-                *[
-                    F.xxhash64(
-                        *[F.col(f"m{b * per_band + j}") for j in range(per_band)]
-                    )
-                    for b in range(_BANDS)
-                ]
-            )
-        ).alias("band", "bucket"),
+    return band_buckets(
+        signatures,
+        ["doc_id"],
+        [
+            F.xxhash64(*[F.col(f"m{b * per_band + j}") for j in range(per_band)])
+            for b in range(_BANDS)
+        ],
     )
 
 
@@ -249,26 +245,12 @@ def dedup_minhash_lsh(spark: SparkSession, sf: str) -> DataFrame:
     deterministic (xxhash64 is a fixed function) but not SQL-portable
     -> rows-only driver check."""
     grouped = minhash_signatures(spark, sf)
-    bands = minhash_band_buckets(grouped)
-    # Candidate pairs via an equi self-join on (band, bucket) — opt
-    # r14, VERDICT r13 #3 applied to the production recipe too.  The
-    # old collect_list + pairwise-array-explode form (kept since r02
-    # because a self-join then re-evaluated the whole minhash subtree
-    # per side) no longer buys anything: the signature table has been
-    # a PERSISTED INDEX artifact since r07, so each join side is a
-    # cheap index read — and a hot band bucket at 100 TB is
-    # distributed/AQE-splittable instead of one serial exploding row.
-    # Identical pair set (in-bucket, doc_a < doc_b, deduplicated);
-    # isolated A/B at sf0.1: 0.61 -> 0.50 s.
+    # the signature table is a persisted index artifact, so each side
+    # of the bucket self-join is a cheap index read
     cand = (
-        bands.select(F.col("doc_id").alias("doc_a"), "band", "bucket")
-        .join(
-            bands.select(F.col("doc_id").alias("doc_b"), "band", "bucket"),
-            ["band", "bucket"],
+        bucket_pairs(
+            minhash_band_buckets(grouped), "doc_id", "doc_a", "doc_b"
         )
-        .filter(F.col("doc_a") < F.col("doc_b"))
-        .select("doc_a", "doc_b")
-        .dropDuplicates(["doc_a", "doc_b"])
         # persisted like `sets` below: the pair table feeds the main
         # verification branch AND the touched-docs prune, so as pure
         # lineage the band-agg + pair-explode subtree would execute
@@ -609,14 +591,13 @@ def embedding_band_buckets(
             F.col("embedding")[p] > F.col("embedding")[q]
         ).cast("int")
 
-    buckets = F.array(
-        *[
+    return band_buckets(
+        emb,
+        ["vec_id"],
+        [
             sum(_bit(b, j) * (1 << j) for j in range(bits_per_band))
             for b in range(_EMB_LSH_BANDS)
-        ]
-    )
-    return emb.select(
-        "vec_id", F.posexplode(buckets).alias("band", "bucket")
+        ],
     )
 
 
@@ -723,17 +704,8 @@ def dedup_embedding_cosine(spark: SparkSession, sf: str) -> DataFrame:
         )
         .persist()
     )
-    ex = embedding_band_buckets(emb)
-    cand = (
-        ex.join(
-            ex.select(
-                F.col("vec_id").alias("vec_b"), "band", "bucket"
-            ),
-            ["band", "bucket"],
-        )
-        .filter(F.col("vec_id") < F.col("vec_b"))
-        .select(F.col("vec_id").alias("vec_a"), "vec_b")
-        .distinct()
+    cand = bucket_pairs(
+        embedding_band_buckets(emb), "vec_id", "vec_a", "vec_b"
     )
     n = emb.select("vec_id", "embedding", "nrm")
     # Arrow-batched sequential dot (opt r14): the verify stage runs
@@ -1104,6 +1076,15 @@ def _pmh_jac_e6() -> F.Column:
     return F.floor(inter / union.cast("double") * 1e6).cast("long")
 
 
+def _pmh_bands() -> list[F.Column]:
+    """The portable MinHash band keys: permutation pairs (m2b, m2b+1)
+    joined as strings."""
+    return [
+        F.concat_ws(":", F.col(f"m{2 * b}"), F.col(f"m{2 * b + 1}"))
+        for b in range(_PMH_BANDS)
+    ]
+
+
 def _pmh_candidates(
     grouped: DataFrame, persist_bands: bool = True
 ) -> DataFrame:
@@ -1114,39 +1095,14 @@ def _pmh_candidates(
     checkpoint) — there the self-join re-reads the leaf twice for
     free and the extra cache pass is pure overhead (measured +1 s on
     v4)."""
-    bands = grouped.select(
-        "doc_id",
-        F.posexplode(
-            F.array(
-                *[
-                    F.concat_ws(
-                        ":", F.col(f"m{2 * b}"), F.col(f"m{2 * b + 1}")
-                    )
-                    for b in range(_PMH_BANDS)
-                ]
-            )
-        ).alias("band", "bucket"),
-    )
-    # equi self-join on (band, bucket) instead of collect_list +
-    # pairwise array explode (opt r14, VERDICT r13 #3): identical
-    # pair set (in-bucket, doc_a < doc_b, deduplicated), distributed
-    # across tasks and AQE-skew-splittable — a hot band bucket at
-    # 100 TB is no longer one serial exploding row.  The (doc_id,
-    # band, bucket) projection persists because the join reads it
-    # twice and its lineage is the full signature aggregate — a
-    # 24 B/row cache vs re-running the 8-permutation md5 pass.
+    bands = band_buckets(grouped, ["doc_id"], _pmh_bands())
+    # The (doc_id, band, bucket) projection persists because the
+    # self-join reads it twice and its lineage is the full signature
+    # aggregate — a 24 B/row cache vs re-running the 8-permutation md5
+    # pass.
     if persist_bands:
         bands = bands.persist()
-    return (
-        bands.select(F.col("doc_id").alias("doc_a"), "band", "bucket")
-        .join(
-            bands.select(F.col("doc_id").alias("doc_b"), "band", "bucket"),
-            ["band", "bucket"],
-        )
-        .filter(F.col("doc_a") < F.col("doc_b"))
-        .select("doc_a", "doc_b")
-        .dropDuplicates(["doc_a", "doc_b"])
-    )
+    return bucket_pairs(bands, "doc_id", "doc_a", "doc_b")
 
 
 # --------------------------------------------------------------------------
@@ -1190,23 +1146,11 @@ def _pmh_delta_candidates(merged: DataFrame) -> DataFrame:
     — pruning changes which buckets get pair-expanded, never which
     delta-incident pairs come out."""
     is_new = (F.col("doc_id") % _PMH_DELTA_MOD == 0).cast("int")
-    bands = merged.select(
-        "doc_id",
-        is_new.alias("is_new"),
-        F.posexplode(
-            F.array(
-                *[
-                    F.concat_ws(
-                        ":", F.col(f"m{2 * b}"), F.col(f"m{2 * b + 1}")
-                    )
-                    for b in range(_PMH_BANDS)
-                ]
-            )
-        ).alias("band", "bucket"),
+    bands = band_buckets(
+        merged, ["doc_id", is_new.alias("is_new")], _pmh_bands()
     )
-    # equi self-join on (band, bucket) instead of collect_list +
-    # pairwise array explode (opt r14, VERDICT r13 #3 — see
-    # _pmh_candidates).  The delta-bucket pruning (only buckets
+    # A delta-against-all probe, not simjoin.bucket_pairs' symmetric
+    # a < b join.  The delta-bucket pruning (only buckets
     # holding a new doc were pair-expanded) is subsumed by the
     # delta-incident pair filter: a pair with a new side can only
     # come from a bucket that holds that new doc, so restricting
@@ -1547,8 +1491,7 @@ def psh_pairs(docs: DataFrame) -> DataFrame:
     )
     # NOTE (opt r14): this stays the collect_list + pairwise-explode
     # form DELIBERATELY, unlike the uncapped band-bucket families
-    # (the VERDICT r13 #3 conversions in _pmh_candidates /
-    # _hash_class_pairs / dedup_minhash_classes): the r14 A/B of the
+    # (operators/simjoin.py::bucket_pairs): the r14 A/B of the
     # self-join form here read curation_pipeline_v3 2.61 -> 3.24 s
     # isolated (the extra capped persist + join passes cost more than
     # the explode), and the 100 TB straggler argument does not apply —
@@ -2338,35 +2281,9 @@ def dedup_minhash_classes(spark: SparkSession, sf: str) -> DataFrame:
         )
         .persist()
     )
-    bands = cls.select(
-        "rep",
-        F.posexplode(
-            F.array(
-                *[
-                    F.struct(
-                        F.col(f"m{2 * b}").alias("x"),
-                        F.col(f"m{2 * b + 1}").alias("y"),
-                    )
-                    for b in range(_PMH_BANDS)
-                ]
-            )
-        ).alias("band", "bucket"),
-    )
-    # equi self-join on (band, bucket) instead of collect_list +
-    # pairwise array explode (opt r14, VERDICT r13 #3): identical
-    # pair set (in-bucket, rep_a < rep_b, deduplicated), distributed
-    # across tasks and AQE-skew-splittable — a hot band bucket at
-    # 100 TB is no longer one serial exploding row.  Both sides read
-    # the persisted cls cache.
-    cand = (
-        bands.select(F.col("rep").alias("rep_a"), "band", "bucket")
-        .join(
-            bands.select(F.col("rep").alias("rep_b"), "band", "bucket"),
-            ["band", "bucket"],
-        )
-        .filter(F.col("rep_a") < F.col("rep_b"))
-        .select("rep_a", "rep_b")
-        .dropDuplicates(["rep_a", "rep_b"])
+    # both self-join sides read the persisted cls cache
+    cand = bucket_pairs(
+        band_buckets(cls, ["rep"], _pmh_class_bands()), "rep", "rep_a", "rep_b"
     )
     a = cls.select(
         F.col("rep").alias("rep_a"),
@@ -2522,21 +2439,7 @@ def dedup_jaccard_classes(spark: SparkSession, sf: str) -> DataFrame:
     pref = cls.select(
         "rep", F.explode(F.slice(F.col("hss"), F.lit(1), plen)).alias("h")
     ).persist()
-    # Candidate pairs via an equi self-join on the prefix element
-    # rather than collect_list + pairwise array explode (opt r13,
-    # same pair set): the explode form materializes a hot prefix
-    # element's ENTIRE pair fan-out from one array row inside one
-    # task — a serial straggler the moment one shingle is frequent —
-    # while the join form distributes the same pairs across tasks and
-    # stays AQE-skew-splittable (guide §2.5; joins split, single
-    # exploding rows don't).  Measured 2.1 -> 1.0 s at sf0.1.
-    cand = (
-        pref.select(F.col("rep").alias("rep_a"), "h")
-        .join(pref.select(F.col("rep").alias("rep_b"), "h"), "h")
-        .filter(F.col("rep_a") < F.col("rep_b"))
-        .select("rep_a", "rep_b")
-        .dropDuplicates(["rep_a", "rep_b"])
-    )
+    cand = bucket_pairs(pref, "rep", "rep_a", "rep_b", on=("h",))
     a = cls.select(
         F.col("rep").alias("rep_a"),
         F.col("n").alias("n_a"),
@@ -2561,7 +2464,7 @@ def dedup_jaccard_classes(spark: SparkSession, sf: str) -> DataFrame:
 def psh_distinct_block_buckets(spark: SparkSession, sf: str) -> DataFrame:
     """(ph, band, bucket) over DISTINCT 16-bit SimHash signatures —
     the candidate stage of dedup_simhash_classes, exposed for the
-    pair-growth audit (the audiofp_distinct_block_buckets pattern:
+    pair-growth audit (the phash_distinct_block_buckets pattern:
     the signature space bounds the class population, so the row
     should saturate as the corpus grows)."""
     ws = F.filter(F.split(F.lower("text"), " "), lambda x: x != F.lit(""))
@@ -2570,21 +2473,21 @@ def psh_distinct_block_buckets(spark: SparkSession, sf: str) -> DataFrame:
         .select("doc_id", ws.alias("ws"))
         .filter(F.size("ws") > 0)
     )
+    from .mmq import phash_distinct_block_buckets
+
     cls = psh_signatures(docs).select(F.col("sig").alias("ph")).distinct()
-    blockbits = _PSH_BITS // 4
-    return cls.select(
-        "ph",
-        F.posexplode(
-            F.array(
-                *[
-                    F.shiftright(F.col("ph"), blockbits * b).bitwiseAND(
-                        F.lit((1 << blockbits) - 1)
-                    )
-                    for b in range(4)
-                ]
-            )
-        ).alias("band", "bucket"),
-    )
+    return phash_distinct_block_buckets(cls, _PSH_BITS)
+
+
+def _pmh_class_bands() -> list[F.Column]:
+    """The class-family band keys: permutation pairs (m2b, m2b+1) as
+    structs."""
+    return [
+        F.struct(
+            F.col(f"m{2 * b}").alias("x"), F.col(f"m{2 * b + 1}").alias("y")
+        )
+        for b in range(_PMH_BANDS)
+    ]
 
 
 def pmh_class_band_buckets(spark: SparkSession, sf: str) -> DataFrame:
@@ -2598,20 +2501,7 @@ def pmh_class_band_buckets(spark: SparkSession, sf: str) -> DataFrame:
     cls = grouped.groupBy(*[f"m{i}" for i in range(_PMH_N)]).agg(
         F.min("doc_id").alias("rep")
     )
-    return cls.select(
-        "rep",
-        F.posexplode(
-            F.array(
-                *[
-                    F.struct(
-                        F.col(f"m{2 * b}").alias("x"),
-                        F.col(f"m{2 * b + 1}").alias("y"),
-                    )
-                    for b in range(_PMH_BANDS)
-                ]
-            )
-        ).alias("band", "bucket"),
-    )
+    return band_buckets(cls, ["rep"], _pmh_class_bands())
 
 
 def jc_class_prefix_buckets(spark: SparkSession, sf: str) -> DataFrame:

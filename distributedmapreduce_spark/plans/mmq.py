@@ -13,6 +13,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
+from ..operators.simjoin import band_buckets, bucket_pairs, hash_blocks
 from .core import query, t
 
 
@@ -516,28 +517,15 @@ def phash_signatures(
 
 
 def phash_block_buckets(
-    spark: SparkSession, sf: str, grid: int = _PHASH_GRID
+    sig: DataFrame, bits: int = _PHASH_GRID * _PHASH_GRID
 ) -> DataFrame:
-    """(asset_id, band, bucket): the Hamming-LSH bucket assignment —
-    the grid²-bit hash split into 4 equal blocks; two hashes within
-    Hamming distance 3 share at least one exact block.  Factored out
-    so tools/pair_growth.py can audit candidate-pair growth for both
-    the 16-bit test recipe and the 64-bit production width."""
-    blockbits = (grid * grid) // 4
-    sig = phash_signatures(spark, sf, grid)
-    return sig.select(
-        "asset_id",
-        F.posexplode(
-            F.array(
-                *[
-                    F.shiftright(F.col("ph"), blockbits * b).bitwiseAND(
-                        F.lit((1 << blockbits) - 1)
-                    )
-                    for b in range(4)
-                ]
-            )
-        ).alias("band", "bucket"),
-    )
+    """(asset_id, band, bucket) of an (asset_id, ph) signature frame:
+    the Hamming-LSH bucket assignment — the ``bits``-wide hash split
+    into 4 equal blocks; two hashes within Hamming distance 3 share at
+    least one exact block.  tools/pair_growth.py audits its
+    candidate-pair growth for both the 16-bit test recipe and the
+    64-bit production width."""
+    return band_buckets(sig, ["asset_id"], hash_blocks(F.col("ph"), bits // 4))
 
 
 def _phash_oracle() -> str:
@@ -600,43 +588,8 @@ def dedup_phash_images(spark: SparkSession, sf: str) -> DataFrame:
     a 64-bit hash whose 16-bit blocks keep buckets sparse
     (tools/pair_growth.py 'phash64_blocks' row)."""
     sig = phash_signatures(spark, sf, _PHASH_GRID).persist()
-    blockbits = (_PHASH_GRID * _PHASH_GRID) // 4
-    bands = sig.select(
-        "asset_id",
-        F.posexplode(
-            F.array(
-                *[
-                    F.shiftright(F.col("ph"), blockbits * b).bitwiseAND(
-                        F.lit((1 << blockbits) - 1)
-                    )
-                    for b in range(4)
-                ]
-            )
-        ).alias("band", "bucket"),
-    )
-    cand = (
-        bands.groupBy("band", "bucket")
-        .agg(F.sort_array(F.collect_list("asset_id")).alias("ids"))
-        .filter(F.size("ids") > 1)
-        .select(
-            F.explode(
-                F.flatten(
-                    F.transform(
-                        F.col("ids"),
-                        lambda x, i: F.transform(
-                            F.slice(
-                                F.col("ids"), i + F.lit(2), F.size("ids")
-                            ),
-                            lambda y: F.struct(
-                                x.alias("asset_a"), y.alias("asset_b")
-                            ),
-                        ),
-                    )
-                )
-            ).alias("pair")
-        )
-        .select("pair.asset_a", "pair.asset_b")
-        .dropDuplicates(["asset_a", "asset_b"])
+    cand = bucket_pairs(
+        phash_block_buckets(sig), "asset_id", "asset_a", "asset_b"
     )
     a = sig.select(F.col("asset_id").alias("asset_a"), F.col("ph").alias("pa"))
     b = sig.select(F.col("asset_id").alias("asset_b"), F.col("ph").alias("pb"))
@@ -655,28 +608,14 @@ def dedup_phash_images(spark: SparkSession, sf: str) -> DataFrame:
 
 
 def phash_distinct_block_buckets(
-    spark: SparkSession, sf: str, grid: int = _PHASH_GRID
+    cls: DataFrame, bits: int = _PHASH_GRID * _PHASH_GRID
 ) -> DataFrame:
-    """(ph, band, bucket) over DISTINCT hashes only — the candidate
-    stage of dedup_phash_classes, exposed for the pair-growth audit:
-    on a hash-degenerate corpus the distinct-hash population is
-    bounded, so this stage's candidate pairs stay flat while the
-    asset-pair stage grows quadratically."""
-    blockbits = (grid * grid) // 4
-    cls = phash_signatures(spark, sf, grid).select("ph").distinct()
-    return cls.select(
-        "ph",
-        F.posexplode(
-            F.array(
-                *[
-                    F.shiftright(F.col("ph"), blockbits * b).bitwiseAND(
-                        F.lit((1 << blockbits) - 1)
-                    )
-                    for b in range(4)
-                ]
-            )
-        ).alias("band", "bucket"),
-    )
+    """(ph, band, bucket) over a frame of DISTINCT hashes — the
+    candidate stage of the hash-class queries (_hash_class_pairs),
+    exposed for the pair-growth audit: on a hash-degenerate corpus the
+    distinct-hash population is bounded, so this stage's candidate
+    pairs stay flat while the asset-pair stage grows quadratically."""
+    return band_buckets(cls, ["ph"], hash_blocks(F.col("ph"), bits // 4))
 
 
 def _phash_classes_oracle() -> str:
@@ -772,39 +711,12 @@ def _hash_class_pairs(
         F.count(F.lit(1)).alias("n"),
         F.min("asset_id").alias("rep"),
     ).persist()
-    blockbits = bits // 4
-    bands = cls.select(
-        "ph",
-        F.posexplode(
-            F.array(
-                *[
-                    F.shiftright(F.col("ph"), blockbits * b).bitwiseAND(
-                        F.lit((1 << blockbits) - 1)
-                    )
-                    for b in range(4)
-                ]
-            )
-        ).alias("band", "bucket"),
-    )
-    # Candidate pairs via an equi self-join on (band, bucket) rather
-    # than collect_list + pairwise array explode (opt r14, VERDICT r13
-    # #3 — the dedup_jaccard_classes r13 conversion applied to the
-    # hash-class families): the explode form materializes a hot
-    # bucket's ENTIRE pair fan-out from one array row inside one task
-    # — a serial straggler invisible to AQE skew handling (joins
-    # split, single exploding rows don't).  The join form produces
-    # the identical pair set (in-bucket, ph_a < ph_b, deduplicated)
-    # distributed across tasks.  Both sides read the persisted cls
-    # projection, so no extra decode/scan.
+    # both self-join sides read the persisted cls projection, so no
+    # extra decode/scan
     cand = (
-        bands.select(F.col("ph").alias("ph_a"), "band", "bucket")
-        .join(
-            bands.select(F.col("ph").alias("ph_b"), "band", "bucket"),
-            ["band", "bucket"],
+        bucket_pairs(
+            phash_distinct_block_buckets(cls, bits), "ph", "ph_a", "ph_b"
         )
-        .filter(F.col("ph_a") < F.col("ph_b"))
-        .select("ph_a", "ph_b")
-        .dropDuplicates(["ph_a", "ph_b"])
         .filter(
             F.bit_count(F.col("ph_a").bitwiseXOR(F.col("ph_b"))) <= ham
         )
@@ -989,24 +901,6 @@ def audiofp_signatures(
             " + aggregate(sequence(0, 7), 0L, (a, i) -> a +"
             " IF(za[i] * tzn > tzs * nz[i], shiftleft(1L, i + 8), 0L))"
         ).alias("ph"),
-    )
-
-
-def audiofp_distinct_block_buckets(spark: SparkSession, sf: str) -> DataFrame:
-    """(ph, band, bucket) over DISTINCT audio fingerprints — the
-    candidate stage of dedup_audiofp_classes, exposed for the
-    pair-growth audit (the phash_distinct_block_buckets pattern)."""
-    cls = audiofp_signatures(spark, sf).select("ph").distinct()
-    return cls.select(
-        "ph",
-        F.posexplode(
-            F.array(
-                *[
-                    F.shiftright(F.col("ph"), 4 * b).bitwiseAND(F.lit(15))
-                    for b in range(4)
-                ]
-            )
-        ).alias("band", "bucket"),
     )
 
 
@@ -1337,24 +1231,6 @@ def videofp_signatures(
             "aggregate(sequence(0, 15), 0L, (a, i) -> a +"
             " IF(cnt[i] * 2 > nf, shiftleft(1L, i), 0L))"
         ).alias("ph"),
-    )
-
-
-def videofp_distinct_block_buckets(spark: SparkSession, sf: str) -> DataFrame:
-    """(ph, band, bucket) over DISTINCT video fingerprints — the
-    candidate stage of dedup_videofp_classes, exposed for the
-    pair-growth audit."""
-    cls = videofp_signatures(spark, sf).select("ph").distinct()
-    return cls.select(
-        "ph",
-        F.posexplode(
-            F.array(
-                *[
-                    F.shiftright(F.col("ph"), 4 * b).bitwiseAND(F.lit(15))
-                    for b in range(4)
-                ]
-            )
-        ).alias("band", "bucket"),
     )
 
 

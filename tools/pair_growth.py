@@ -174,11 +174,15 @@ def main() -> None:
         # the production width — 64-bit hashes in 16-bit blocks keep
         # buckets sparse
         from distributedmapreduce_spark.plans.mmq import (
-            audiofp_distinct_block_buckets,
+            audiofp_signatures,
             phash_block_buckets,
             phash_distinct_block_buckets,
-            videofp_distinct_block_buckets,
+            phash_signatures,
+            videofp_signatures,
         )
+
+        def distinct_ph(sig):
+            return sig.select("ph").distinct()
 
         # audio fingerprint (round 12): 16-bit energy/ZCR signature,
         # distinct-hash class stage — like phash16, the signature
@@ -186,20 +190,26 @@ def main() -> None:
         # stays bounded while asset pairs would grow quadratically
         if want("audiofp16"):
             results.setdefault("audiofp16", {})[n] = _bucket_stats(
-                audiofp_distinct_block_buckets(spark, sf),
+                phash_distinct_block_buckets(
+                    distinct_ph(audiofp_signatures(spark, sf))
+                ),
                 ["band", "bucket"],
                 "ph",
             )
         # video temporal hash (round 12): same distinct-class argument
         if want("videofp16"):
             results.setdefault("videofp16", {})[n] = _bucket_stats(
-                videofp_distinct_block_buckets(spark, sf),
+                phash_distinct_block_buckets(
+                    distinct_ph(videofp_signatures(spark, sf))
+                ),
                 ["band", "bucket"],
                 "ph",
             )
         if want("phash64_distinct"):
             results.setdefault("phash64_distinct", {})[n] = _bucket_stats(
-                phash_distinct_block_buckets(spark, sf, grid=8),
+                phash_distinct_block_buckets(
+                    distinct_ph(phash_signatures(spark, sf, grid=8)), bits=64
+                ),
                 ["band", "bucket"],
                 "ph",
             )
@@ -231,13 +241,15 @@ def main() -> None:
             )
         if want("phash16_blocks"):
             results.setdefault("phash16_blocks", {})[n] = _bucket_stats(
-                phash_block_buckets(spark, sf, grid=4),
+                phash_block_buckets(phash_signatures(spark, sf, grid=4)),
                 ["band", "bucket"],
                 "asset_id",
             )
         if want("phash64_blocks"):
             results.setdefault("phash64_blocks", {})[n] = _bucket_stats(
-                phash_block_buckets(spark, sf, grid=8),
+                phash_block_buckets(
+                    phash_signatures(spark, sf, grid=8), bits=64
+                ),
                 ["band", "bucket"],
                 "asset_id",
             )
