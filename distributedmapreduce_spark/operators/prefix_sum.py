@@ -14,6 +14,11 @@ two-pass prefix sum:
 3. within each partition, a window PARTITIONED BY partition id gives
    the local running sum — fully parallel across partitions.
 
+With one input partition (a small file is one split) there is no
+earlier partition, so every base is zero: the partition count is
+probed with ``df.rdd.getNumPartitions()``, which plans the scan but
+launches no job, and pass 2 runs alone.
+
 Correctness requires that partition order equals row order, which
 holds for ``spark.read.text`` over a single file (splits are laid out
 in byte order).  For multi-file inputs, sort the file list first.
@@ -111,14 +116,18 @@ def with_prefix_sums(
 
     contrib_cols = [f"__contrib_{name}" for name in sums]
     # Pass 1: per-partition totals — O(#partitions) rows to the driver.
-    totals = (
-        tagged.groupBy(_PID)
-        .agg(
-            F.count(F.lit(1)).alias("__cnt"),
-            *[F.sum(c).alias(c) for c in contrib_cols],
+    # With one partition (or none) nothing precedes it, every base is
+    # zero and pass 1 is skipped; the probe plans the scan, no job.
+    totals = []
+    if df.rdd.getNumPartitions() > 1:
+        totals = (
+            tagged.groupBy(_PID)
+            .agg(
+                F.count(F.lit(1)).alias("__cnt"),
+                *[F.sum(c).alias(c) for c in contrib_cols],
+            )
+            .collect()
         )
-        .collect()
-    )
     totals.sort(key=lambda r: r[_PID])
     bases: dict[int, tuple[int, ...]] = {}
     running = [0] * (len(contrib_cols) + 1)  # [row-count base, *sum bases]
@@ -134,7 +143,7 @@ def with_prefix_sums(
         base_map_items.append(F.array(*[F.lit(v) for v in vals]))
     if base_map_items:
         bases_col = F.create_map(*base_map_items)[F.col(_PID)]
-    else:  # empty input: no partitions observed — all bases are zero
+    else:  # one partition, or no rows: all bases are zero
         bases_col = F.array(*[F.lit(0)] * (len(contrib_cols) + 1))
 
     # Pass 2: within-partition running sums — parallel across partitions.

@@ -21,7 +21,10 @@ Offset semantics (the whole subtlety, SURVEY.md §1.1-1.2):
   preceding NON-EMPTY tokens — runs of spaces advance nothing.
 
 Everything is built-in-function DataFrame code (whole-stage codegen;
-no Python UDFs); the only non-declarative piece is the distributed
+no Python UDFs, and no higher-order lambdas, which Spark interprets
+row by row): tokens are ``array_remove(split(line, " "), "")`` and a
+token's offset is the length of the preceding tokens re-joined by
+single spaces.  The only non-declarative piece is the distributed
 prefix sum for the line cursor (operators/prefix_sum.py).
 """
 
@@ -66,7 +69,7 @@ def tokens(lines_df: DataFrame) -> DataFrame:
     (mapper_word_count.py:18-20): offsets are positions in the line's
     words re-joined by single spaces, anchored at byte_offset.
     """
-    toks = F.filter(F.split(F.col("line"), " "), lambda x: x != F.lit(""))
+    toks = F.array_remove(F.split(F.col("line"), " "), "")
     exploded = lines_df.select(
         F.col("byte_offset"),
         F.col("line_id"),
@@ -77,10 +80,11 @@ def tokens(lines_df: DataFrame) -> DataFrame:
         "__toks",
         F.posexplode("__toks").alias("pos", "word"),
     )
-    intra = F.aggregate(
-        F.slice(F.col("__toks"), F.lit(1), F.col("pos")),
-        F.lit(0).cast("long"),
-        lambda acc, x: acc + F.length(x) + 1,
+    # sum(len(tok) + 1) over the pos preceding tokens == the length of
+    # those tokens joined by single spaces, plus the one space after
+    intra = F.when(F.col("pos") == 0, F.lit(0)).otherwise(
+        F.length(F.array_join(F.slice("__toks", F.lit(1), F.col("pos")), " "))
+        + 1
     )
     return exploded.select(
         "word",

@@ -10,6 +10,7 @@ convention): a raw "\\n" line is represented as "".
 from __future__ import annotations
 
 import os
+import random
 import re
 from collections import defaultdict
 
@@ -65,6 +66,31 @@ def replay_inverted_index(pairs: list[tuple[str, int]]) -> dict[str, list[int]]:
     for w, off in pairs:
         postings[w].append(off)
     return {w: sorted(v) for w, v in postings.items()}
+
+
+def quirk_lines(n: int, seed: int = 0) -> list[str]:
+    """``n`` seeded raw lines rich in the pipeline's quirks: blank
+    lines, whitespace-only lines, punctuation-only lines (kept, no
+    tokens), runs of spaces, leading/trailing spaces and punctuation
+    inside words."""
+    rng = random.Random(seed)
+    words = ["alpha", "beta", "Gamma", "don't", "42nd", "x", "street!", "a.b", "9"]
+    out = []
+    for _ in range(n):
+        kind = rng.random()
+        if kind < 0.1:
+            out.append("")
+        elif kind < 0.15:
+            out.append(" " * rng.randint(1, 4))
+        elif kind < 0.2:
+            out.append("".join(rng.choice("!?.,;:-'") for _ in range(rng.randint(1, 6))))
+        else:
+            toks = [rng.choice(words) for _ in range(rng.randint(1, 12))]
+            seps = [" " * rng.choice((1, 1, 1, 2, 3)) for _ in toks]
+            lead = " " * rng.choice((0, 0, 0, 1, 2))
+            out.append(lead + "".join(t + s for t, s in zip(toks, seps)).rstrip(" ")
+                       + " " * rng.choice((0, 0, 1)))
+    return out
 
 
 def load_reference_input(path: str = REFERENCE_INPUT) -> list[str]:

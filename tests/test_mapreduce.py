@@ -9,7 +9,7 @@ import pytest
 from distributedmapreduce_spark.operators import mapreduce as MR
 from distributedmapreduce_spark.operators import text as T
 
-from .reference_replay import needs_reference_input
+from .reference_replay import needs_reference_input, quirk_lines
 
 
 @pytest.fixture(scope="module")
@@ -38,6 +38,24 @@ def test_facade_inverted_index_matches_dataframe(spark, ref_lines):
         for r in T.inverted_index(T.tokens(ref_lines)).collect()
     }
     assert facade == native
+
+
+def test_facade_matches_dataframe_on_quirk_text(spark):
+    """The reference's own mapper (``_tokenize_mapper``) through the
+    facade and the built-in DataFrame tokenizer agree on quirk-rich
+    text: runs of spaces, blank, whitespace- and punctuation-only
+    lines."""
+    doc = quirk_lines(400, seed=3)
+    lines = T.lines(spark.createDataFrame([(l,) for l in doc], "value string"))
+    tok = T.tokens(lines)
+    facade_wc = {r.word: r["count"] for r in MR.word_count_job(lines).collect()}
+    native_wc = {r.word: r["count"] for r in T.word_count(tok).collect()}
+    assert facade_wc == native_wc and native_wc
+    facade_ii = {
+        r.word: list(r.postings) for r in MR.inverted_index_job(lines).collect()
+    }
+    native_ii = {r.word: list(r.postings) for r in T.inverted_index(tok).collect()}
+    assert facade_ii == native_ii
 
 
 def test_custom_job(spark):

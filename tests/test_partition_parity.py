@@ -5,11 +5,19 @@ demonstrating partition-count parity and key-functional correctness
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from distributedmapreduce_spark.operators import text as T
 
-from .reference_replay import needs_reference_input
+from .reference_replay import (
+    load_reference_input,
+    needs_reference_input,
+    quirk_lines,
+    replay_inverted_index,
+    replay_lines,
+    replay_tokens,
+)
 
 
 @needs_reference_input
@@ -32,3 +40,34 @@ def test_length_hash_repartition(spark):
     a = sorted((r_.word, r_["count"]) for r_ in T.word_count(parted).collect())
     b = sorted((r_.word, r_["count"]) for r_ in T.word_count(tok).collect())
     assert a == b
+
+
+@pytest.mark.parametrize(
+    "split_bytes", [None, 4096], ids=["one_split", "forced_splits"]
+)
+def test_file_scan_split_parity(spark, tmp_path, split_bytes):
+    """S4 parity on a real file scan at both prefix-sum branches: one
+    split (no totals pass) and >= 3 splits forced through
+    ``spark.sql.files.maxPartitionBytes`` (the distributed two-pass
+    sum, with lines cut at split boundaries by the text reader)."""
+    path = tmp_path / "quirks.txt"
+    path.write_text("\n".join(quirk_lines(600, seed=5)) + "\n")
+    want_lines = replay_lines(load_reference_input(str(path)))
+    want_pairs = replay_tokens(want_lines)
+    key = "spark.sql.files.maxPartitionBytes"
+    before = spark.conf.get(key)
+    if split_bytes is not None:
+        spark.conf.set(key, str(split_bytes))
+    try:
+        raw = spark.read.text(str(path))
+        n = raw.rdd.getNumPartitions()
+        assert n == 1 if split_bytes is None else n >= 3
+        lines = T.lines(raw)
+        assert sorted(tuple(r) for r in lines.collect()) == want_lines
+        tok = T.tokens(lines)
+        got = sorted((r.word, r.offset) for r in tok.collect())
+        assert got == sorted(want_pairs)
+        ii = {r.word: list(r.postings) for r in T.inverted_index(tok).collect()}
+        assert ii == replay_inverted_index(want_pairs)
+    finally:
+        spark.conf.set(key, before)

@@ -4,6 +4,8 @@ a neighboring @query definition (it happened) must fail CI."""
 
 from __future__ import annotations
 
+import os
+
 from distributedmapreduce_spark.plans.registry import get_registry
 
 MIN_QUERIES = 94
@@ -79,21 +81,13 @@ def test_oracle_diff_artifact(tmp_path, monkeypatch):
     import json
     import sys
 
-    sys.path.insert(0, "/root/repo/tools")
+    sys.path.insert(
+        0, os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "tools")
+    )
     import check_oracle as co
 
-    monkeypatch.setattr(
-        co, "_write_diff_artifact", co._write_diff_artifact
-    )
     # redirect the artifact away from the real repo root
-    real_join = co.os.path.join
-
-    def fake_join(a, *p):
-        if a == "/root/repo" and p and p[0].startswith("ORACLE_DIFF_"):
-            return real_join(str(tmp_path), *p)
-        return real_join(a, *p)
-
-    monkeypatch.setattr(co.os.path, "join", fake_join)
+    monkeypatch.setattr(co, "_REPO_ROOT", str(tmp_path))
     co._write_diff_artifact(
         "demo",
         ["k", "v"],

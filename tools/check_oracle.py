@@ -16,12 +16,12 @@ so a driver/local disagreement always ships row-level evidence.
 from __future__ import annotations
 
 import math
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
-
-import os
+_REPO_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, _REPO_ROOT)
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
 TABLES = (
@@ -75,7 +75,7 @@ def _write_diff_artifact(name, scols, srows, dcols, drows, versions):
         "spark_only_rows": [[repr(v) for v in r] for r in spark_only],
         "oracle_only_rows": [[repr(v) for v in r] for r in duck_only],
     }
-    path = os.path.join("/root/repo", f"ORACLE_DIFF_{name}.json")
+    path = os.path.join(_REPO_ROOT, f"ORACLE_DIFF_{name}.json")
     with open(path, "w") as f:
         json.dump(out, f, indent=1)
     print(f"        wrote {path}")
