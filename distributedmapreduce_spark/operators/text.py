@@ -22,10 +22,12 @@ Offset semantics (the whole subtlety, SURVEY.md §1.1-1.2):
 
 Everything is built-in-function DataFrame code (whole-stage codegen;
 no Python UDFs, and no higher-order lambdas, which Spark interprets
-row by row): tokens are ``array_remove(split(line, " "), "")`` and a
-token's offset is the length of the preceding tokens re-joined by
-single spaces.  The only non-declarative piece is the distributed
-prefix sum for the line cursor (operators/prefix_sum.py).
+row by row): the line cleaner and the tokenizer are the shared
+``functions/text.py`` rules (``clean_line``; ``tokens`` =
+``array_remove(split(line, " "), "")``), and a token's offset is the
+length of the preceding tokens re-joined by single spaces.  The only
+non-declarative piece is the distributed prefix sum for the line
+cursor (operators/prefix_sum.py).
 """
 
 from __future__ import annotations
@@ -33,9 +35,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..functions.text import clean_line, tokens as _tokens
 from .prefix_sum import with_prefix_sums
-
-CLEAN_RE = "[^a-zA-Z0-9 ]"
 
 
 def lines(raw: DataFrame, value_col: str = "value") -> DataFrame:
@@ -47,7 +48,7 @@ def lines(raw: DataFrame, value_col: str = "value") -> DataFrame:
     """
     cleaned = raw.select(
         F.col(value_col).alias("__raw"),
-        F.regexp_replace(F.col(value_col), CLEAN_RE, "").alias("line"),
+        clean_line(F.col(value_col)).alias("line"),
     )
     contrib = F.when(F.col("__raw") == "", F.lit(1)).otherwise(F.length("line"))
     with_offsets = with_prefix_sums(cleaned, {"byte_offset": contrib})
@@ -69,7 +70,7 @@ def tokens(lines_df: DataFrame) -> DataFrame:
     (mapper_word_count.py:18-20): offsets are positions in the line's
     words re-joined by single spaces, anchored at byte_offset.
     """
-    toks = F.array_remove(F.split(F.col("line"), " "), "")
+    toks = _tokens(F.col("line"))
     exploded = lines_df.select(
         F.col("byte_offset"),
         F.col("line_id"),

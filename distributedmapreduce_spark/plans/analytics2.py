@@ -18,6 +18,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
+from ..functions.text import tokens
 from .core import EVENTS_US, query, t
 from .llm3 import _md5_u32, _md5_u32_sql
 
@@ -501,9 +502,7 @@ def count_min_heavy_estimates(spark: SparkSession, sf: str) -> DataFrame:
     docs = t(spark, sf, "documents")
     wc = (
         docs.select(
-            F.explode(
-                F.filter(F.split("text", " "), lambda x: x != F.lit(""))
-            ).alias("word")
+            F.explode(tokens("text")).alias("word")
         )
         .groupBy("word")
         .agg(F.count(F.lit(1)).cast("long").alias("n"))
@@ -672,9 +671,7 @@ def vocab_coverage_curve(spark: SparkSession, sf: str) -> DataFrame:
     docs = t(spark, sf, "documents")
     wc = (
         docs.select(
-            F.explode(
-                F.filter(F.split("text", " "), lambda x: x != F.lit(""))
-            ).alias("word")
+            F.explode(tokens("text")).alias("word")
         )
         .groupBy("word")
         .agg(F.count(F.lit(1)).cast("long").alias("n"))

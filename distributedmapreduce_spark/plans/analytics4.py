@@ -478,10 +478,11 @@ def reciprocal_rank_fusion(spark: SparkSession, sf: str) -> DataFrame:
     window, so Spark plans Partial WindowGroupLimits (map-side
     per-term top-20), and the fusion join touches <= 40 rows per
     term."""
-    from .textq import _SEARCH_TERMS, _tokens_col_lower
+    from ..functions.text import tokens
+    from .textq import _SEARCH_TERMS
 
     d = t(spark, sf, "documents").select(
-        "doc_id", _tokens_col_lower().alias("ws")
+        "doc_id", tokens("text", lowercase=True).alias("ws")
     )
     def _tf(term: str):
         # single-arg lambda: a 2-arg lambda would be read by F.filter

@@ -17,6 +17,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
+from ..functions.text import norm_fingerprint, tokens
 from ..operators.simjoin import bucket_pairs
 from .core import EVENTS_US, query, t
 
@@ -505,12 +506,7 @@ def _nb_rk(spark: SparkSession, sf: str) -> DataFrame:
     docs = t(spark, sf, "documents").select(
         "doc_id",
         "lang",
-        F.explode(
-            F.filter(
-                F.split(F.lower(F.col("text")), " "),
-                lambda x: x != F.lit(""),
-            )
-        ).alias("w"),
+        F.explode(tokens("text", lowercase=True)).alias("w"),
     )
     dw = (
         docs.groupBy("doc_id", "lang", "w")
@@ -690,12 +686,7 @@ def zipf_slope_top_vocab(spark: SparkSession, sf: str) -> DataFrame:
     f = (
         t(spark, sf, "documents")
         .select(
-            F.explode(
-                F.filter(
-                    F.split(F.lower(F.col("text")), " "),
-                    lambda x: x != F.lit(""),
-                )
-            ).alias("w")
+            F.explode(tokens("text", lowercase=True)).alias("w")
         )
         .groupBy("w")
         .agg(F.count(F.lit(1)).cast("long").alias("n"))
@@ -2202,11 +2193,7 @@ def dup_cluster_size_histogram(spark: SparkSession, sf: str) -> DataFrame:
     the cluster-size table; both aggregates map-side combinable,
     output bounded by distinct cluster sizes."""
     fp = t(spark, sf, "documents").select(
-        F.md5(
-            F.lower(
-                F.trim(F.regexp_replace(F.col("text"), " +", " "))
-            )
-        ).alias("fingerprint")
+        norm_fingerprint("text").alias("fingerprint")
     )
     cl = fp.groupBy("fingerprint").agg(
         F.count(F.lit(1)).cast("long").alias("sz")
@@ -2576,12 +2563,7 @@ def heaps_law_vocab_growth(spark: SparkSession, sf: str) -> DataFrame:
     range conditions, outputs 10 rows)."""
     toks = t(spark, sf, "documents").select(
         "doc_id",
-        F.explode(
-            F.filter(
-                F.split(F.lower(F.col("text")), " "),
-                lambda x: x != F.lit(""),
-            )
-        ).alias("w"),
+        F.explode(tokens("text", lowercase=True)).alias("w"),
     )
     fw = toks.groupBy("w").agg(
         F.min("doc_id").cast("long").alias("first_doc")
@@ -2899,12 +2881,7 @@ def burrows_delta_sources(spark: SparkSession, sf: str) -> DataFrame:
     panel-sized too."""
     toks = t(spark, sf, "documents").select(
         "source",
-        F.explode(
-            F.filter(
-                F.split(F.lower(F.col("text")), " "),
-                lambda x: x != F.lit(""),
-            )
-        ).alias("w"),
+        F.explode(tokens("text", lowercase=True)).alias("w"),
     )
     wc = toks.groupBy("source", "w").agg(
         F.count(F.lit(1)).cast("long").alias("n")
@@ -3129,12 +3106,7 @@ def chao1_vocab_estimate(spark: SparkSession, sf: str) -> DataFrame:
     f = (
         t(spark, sf, "documents")
         .select(
-            F.explode(
-                F.filter(
-                    F.split(F.lower(F.col("text")), " "),
-                    lambda x: x != F.lit(""),
-                )
-            ).alias("w")
+            F.explode(tokens("text", lowercase=True)).alias("w")
         )
         .groupBy("w")
         .agg(F.count(F.lit(1)).cast("long").alias("n"))
@@ -3185,12 +3157,7 @@ def token_length_histogram(spark: SparkSession, sf: str) -> DataFrame:
         t(spark, sf, "documents")
         .select(
             "lang",
-            F.explode(
-                F.filter(
-                    F.split(F.lower(F.col("text")), " "),
-                    lambda x: x != F.lit(""),
-                )
-            ).alias("w"),
+            F.explode(tokens("text", lowercase=True)).alias("w"),
         )
         .select("lang", F.length("w").cast("long").alias("token_len"))
         .groupBy("lang", "token_len")

@@ -21,7 +21,11 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
-from ..functions.text import norm_fingerprint, shingles as _shingles
+from ..functions.text import (
+    norm_fingerprint,
+    shingles as _shingles,
+    tokens as _tokens,
+)
 from ..functions.vector import (  # noqa: F401
     cosine as _cosine,
     dot as _dot,
@@ -65,10 +69,6 @@ def dedup_exact(spark: SparkSession, sf: str) -> DataFrame:
         F.min("doc_id").over(w).alias("keeper"),
         F.count(F.lit(1)).over(w).alias("n_copies"),
     ).withColumn("is_kept", F.col("doc_id") == F.col("keeper"))
-
-
-def _shingles_col(n: int = 3):
-    return _shingles("text", n)
 
 
 _SHINGLE_DF_CAP = 64  # drop shingles present in > this many docs of a block
@@ -122,7 +122,7 @@ def dedup_ngram_jaccard(spark: SparkSession, sf: str) -> DataFrame:
     practice: ubiquitous shingles carry no dedup signal).  At 100 TB
     you'd block on MinHash bands instead — see dedup_minhash_lsh."""
     sh = t(spark, sf, "documents").select(
-        "doc_id", "lang", "source", _shingles_col(3).alias("shingles")
+        "doc_id", "lang", "source", _shingles("text", 3).alias("shingles")
     ).filter(F.size("shingles") > 0)
     # similarity-join shape: explode shingles, equi-join on
     # (block, shingle) to count shared shingles per pair — no pairwise
@@ -188,7 +188,7 @@ def minhash_signatures(spark: SparkSession, sf: str) -> DataFrame:
 
     def _build_signatures() -> DataFrame:
         sh = t(spark, sf, "documents").select(
-            "doc_id", _shingles_col(3).alias("shingles")
+            "doc_id", _shingles("text", 3).alias("shingles")
         ).filter(F.size("shingles") > 0)
         ex = sh.select("doc_id", F.explode("shingles").alias("s")).select(
             "doc_id", F.xxhash64("s").alias("h")
@@ -311,9 +311,7 @@ def simhash_block_buckets(
     tables-vs-recall LSH trade, chosen over unbounded buckets."""
     import numpy as np
 
-    ws = F.array_distinct(
-        F.filter(F.split(F.lower("text"), " "), lambda x: x != F.lit(""))
-    )
+    ws = F.array_distinct(_tokens("text", lowercase=True))
     docs = t(spark, sf, "documents").select("doc_id", ws.alias("ws")).filter(
         F.size("ws") > 0
     )
@@ -862,8 +860,6 @@ def training_data_pipeline(spark: SparkSession, sf: str) -> DataFrame:
     keeper is a window over the fingerprint (no second scan, cf.
     dedup_exact); all gates are JVM expressions so the whole pipeline
     is one codegen'd pass + one shuffle."""
-    from ..functions.text import tokens as _tokens
-
     docs = t(spark, sf, "documents")
     ws = _tokens("text")
     scored = docs.select(
@@ -1057,7 +1053,7 @@ def _pmh_signatures(docs: DataFrame) -> DataFrame:
     (dedup_minhash_portable + minhash_recall_audit)."""
     from .llm3 import _md5_u32
 
-    sh = docs.select("doc_id", _shingles_col(3).alias("shingles")).filter(
+    sh = docs.select("doc_id", _shingles("text", 3).alias("shingles")).filter(
         F.size("shingles") > 0
     )
     ex = sh.select("doc_id", F.explode("shingles").alias("s"))
@@ -1549,7 +1545,7 @@ def dedup_simhash_portable(spark: SparkSession, sf: str) -> DataFrame:
     stopword-like buckets for bounded fan-out at any corpus size.
     Pure built-ins, no UDF: the 16 majority sums are plain
     shiftright/AND aggregates with map-side combine."""
-    ws = F.filter(F.split(F.lower("text"), " "), lambda x: x != F.lit(""))
+    ws = _tokens("text", lowercase=True)
     docs = (
         t(spark, sf, "documents")
         .select("doc_id", ws.alias("ws"))
@@ -1980,7 +1976,7 @@ def minhash_recall_audit(spark: SparkSession, sf: str) -> DataFrame:
         .select("doc_id")
     )
     sh = (
-        docs.select("doc_id", _shingles_col(3).alias("shingles"))
+        docs.select("doc_id", _shingles("text", 3).alias("shingles"))
         .filter(F.size("shingles") > 0)
         .select("doc_id", F.explode("shingles").alias("s"))
         .distinct()
@@ -2164,7 +2160,7 @@ def dedup_simhash_classes(spark: SparkSession, sf: str) -> DataFrame:
     saturate instead)."""
     from .mmq import _hash_class_pairs
 
-    ws = F.filter(F.split(F.lower("text"), " "), lambda x: x != F.lit(""))
+    ws = _tokens("text", lowercase=True)
     docs = (
         t(spark, sf, "documents")
         .select("doc_id", ws.alias("ws"))
@@ -2422,7 +2418,7 @@ def dedup_jaccard_classes(spark: SparkSession, sf: str) -> DataFrame:
     # arrives as one scan split at bench scale and would hash on a
     # single core (guide §2.5; no-op on an already-parallel scan)
     sh = spread(t(spark, sf, "documents").select("doc_id", "text")).select(
-        "doc_id", _shingles_col(3).alias("shingles")
+        "doc_id", _shingles("text", 3).alias("shingles")
     ).filter(F.size("shingles") > 0)
     ex = sh.select("doc_id", F.explode("shingles").alias("s"))
     sets = ex.groupBy("doc_id").agg(
@@ -2467,7 +2463,7 @@ def psh_distinct_block_buckets(spark: SparkSession, sf: str) -> DataFrame:
     pair-growth audit (the phash_distinct_block_buckets pattern:
     the signature space bounds the class population, so the row
     should saturate as the corpus grows)."""
-    ws = F.filter(F.split(F.lower("text"), " "), lambda x: x != F.lit(""))
+    ws = _tokens("text", lowercase=True)
     docs = (
         t(spark, sf, "documents")
         .select("doc_id", ws.alias("ws"))
@@ -2512,7 +2508,7 @@ def jc_class_prefix_buckets(spark: SparkSession, sf: str) -> DataFrame:
     from .llm3 import _md5_u32
 
     sh = t(spark, sf, "documents").select(
-        "doc_id", _shingles_col(3).alias("shingles")
+        "doc_id", _shingles("text", 3).alias("shingles")
     ).filter(F.size("shingles") > 0)
     sets = sh.select("doc_id", F.explode("shingles").alias("s")).groupBy(
         "doc_id"

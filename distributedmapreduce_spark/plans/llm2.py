@@ -10,6 +10,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
+from ..functions.text import tokens
 from ..functions.vector import cosine as _cosine
 from ..operators.index_store import cached_index
 from .core import query, t
@@ -120,9 +121,7 @@ def tfidf_top_terms(spark: SparkSession, sf: str) -> DataFrame:
     docs = t(spark, sf, "documents")
     words = docs.select(
         "doc_id",
-        F.explode(
-            F.filter(F.split("text", " "), lambda x: x != F.lit(""))
-        ).alias("word"),
+        F.explode(tokens("text")).alias("word"),
     ).repartition("word")
     tf = words.groupBy("doc_id", "word").agg(F.count(F.lit(1)).alias("tf"))
     # tf rows are unique per (doc_id, word), so document frequency is a
@@ -530,12 +529,7 @@ def feature_hash_stats(spark: SparkSession, sf: str) -> DataFrame:
     from .llm3 import _md5_u32
 
     toks = t(spark, sf, "documents").select(
-        F.explode(
-            F.filter(
-                F.split(F.lower(F.col("text")), " "),
-                lambda x: x != F.lit(""),
-            )
-        ).alias("w")
+        F.explode(tokens("text", lowercase=True)).alias("w")
     )
     h = toks.groupBy("w").agg(F.count(F.lit(1)).alias("cnt")).select(
         (_md5_u32("fh", F.col("w")) % _FH_BUCKETS).alias("bucket"),

@@ -19,13 +19,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
+from ..functions.text import ngrams, tokens
 from .core import query, t
 from .llm3 import _md5_u32_sql
-
-# Tokens = split on single space, drop empties — the reference's
-# mapper tokenization (mapper_word_count.py:16-18) shared by every
-# text-family query in this repo.
-_TOKS = "filter(split(text, ' '), x -> x != '')"
 
 
 @query(
@@ -87,28 +83,22 @@ _BIGRAMS_SQL = f"""
 def _bigrams(spark: SparkSession, sf: str) -> DataFrame:
     """(doc_id, w1, w2, bigram) — one row per consecutive token pair.
 
-    Built with slice+zip_with on the token array (no join, no UDF):
-    the bigram stream is produced map-side in whole-stage codegen.
+    Built with ``ngrams`` on the token array (no join, no UDF), so the
+    bigram stream is produced map-side; tokens hold no space, so w1
+    and w2 are the text either side of the bigram's one space.
     (Optimization r13 measured a pre-spread of the corpus frame here
     NET-NEGATIVE — the per-bigram work downstream is light JVM
     hashing, and the extra exchange cost more than the parallelism
     won, the same verdict as tfidf's map side.)
     """
     docs = t(spark, sf, "documents")
-    pairs = F.expr(
-        f"zip_with(slice({_TOKS}, 1, size({_TOKS}) - 1),"
-        f"         slice({_TOKS}, 2, size({_TOKS}) - 1),"
-        "          (a, b) -> struct(a AS w1, b AS w2))"
-    )
-    return (
-        docs.filter(F.size(F.expr(_TOKS)) >= 2)
-        .select("doc_id", F.explode(pairs).alias("p"))
-        .select(
-            "doc_id",
-            F.col("p.w1").alias("w1"),
-            F.col("p.w2").alias("w2"),
-            F.concat_ws(" ", "p.w1", "p.w2").alias("bigram"),
-        )
+    return docs.select(
+        "doc_id", F.explode(ngrams(tokens("text"), 2)).alias("bigram")
+    ).select(
+        "doc_id",
+        F.substring_index("bigram", " ", 1).alias("w1"),
+        F.substring_index("bigram", " ", -1).alias("w2"),
+        "bigram",
     )
 
 
@@ -137,7 +127,7 @@ def lm_bigram_surprisal(spark: SparkSession, sf: str) -> DataFrame:
     the tails.  Surprisal is log2(n1) - log2(n12) of identical
     integers on both engines; per-doc means are bounded (≤ ~20 bits)
     so 4dp rounding is stable.  Scale: the bigram stream is generated
-    map-side (slice+zip_with, no join); the two count tables are
+    map-side (ngrams, no join); the two count tables are
     vocab- and vocab²-bounded aggregates with map-side partials; the
     scoring joins shuffle on bigram/w1 keys — at 100 TB the count
     tables are the small sides and AQE broadcast-converts them."""

@@ -665,9 +665,7 @@ def heavy_hitters_mg(spark: SparkSession, sf: str) -> DataFrame:
     # full documents row (guide §2.3: project before the exchange).
     docs = spread(t(spark, sf, "documents").select("text"))
     toks = docs.select(
-        F.explode(
-            F.filter(F.split("text", " "), lambda x: x != F.lit(""))
-        ).alias("word")
+        F.explode(_tokens("text")).alias("word")
     )
     k = _MG_K
 

@@ -23,6 +23,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions.text import tokens
 from .core import query, t
 
 _BPE_K = 6  # learned merges; oracle CTE chain doubles per step (2^K)
@@ -332,9 +333,7 @@ def bpe_train_merges(spark: SparkSession, sf: str) -> DataFrame:
     """
     docs = t(spark, sf, "documents")
     words = docs.select(
-        F.explode(
-            F.filter(F.split(F.lower("text"), " "), lambda x: x != F.lit(""))
-        ).alias("word")
+        F.explode(tokens("text", lowercase=True)).alias("word")
     ).filter(F.col("word").rlike("^[a-z0-9]+$"))
     vocab = _char_vocab(words)
     merges, _cur = _train_merges(vocab, _BPE_K)
@@ -389,9 +388,7 @@ def bpe_encode_token_counts(spark: SparkSession, sf: str) -> DataFrame:
     docs = t(spark, sf, "documents")
     dw = docs.select(
         "doc_id",
-        F.explode(
-            F.filter(F.split(F.lower("text"), " "), lambda x: x != F.lit(""))
-        ).alias("word"),
+        F.explode(tokens("text", lowercase=True)).alias("word"),
     ).filter(F.col("word").rlike("^[a-z0-9]+$"))
     vocab = _char_vocab(dw.select("word"))
     _merges, cur = _train_merges(vocab, _BPE_K)
@@ -477,9 +474,7 @@ def bpe_encode_corpus_stream(spark: SparkSession, sf: str) -> DataFrame:
     docs = t(spark, sf, "documents")
     dw = docs.select(
         "doc_id",
-        F.posexplode(
-            F.filter(F.split(F.lower("text"), " "), lambda x: x != F.lit(""))
-        ).alias("pos", "word"),
+        F.posexplode(tokens("text", lowercase=True)).alias("pos", "word"),
     ).filter(F.col("word").rlike("^[a-z0-9]+$"))
     vocab = _char_vocab(dw.select("word"))
     _merges, cur = _train_merges(vocab, _BPE_K)
@@ -562,9 +557,7 @@ def bpe_fertility_by_lang(spark: SparkSession, sf: str) -> DataFrame:
     docs = t(spark, sf, "documents")
     dw = docs.select(
         "lang",
-        F.explode(
-            F.filter(F.split(F.lower("text"), " "), lambda x: x != F.lit(""))
-        ).alias("word"),
+        F.explode(tokens("text", lowercase=True)).alias("word"),
     ).filter(F.col("word").rlike("^[a-z0-9]+$"))
     vocab = _char_vocab(dw.select("word"))
     _merges, cur = _train_merges(vocab, _BPE_K)

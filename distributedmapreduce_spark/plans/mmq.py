@@ -14,7 +14,7 @@ from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from ..operators.simjoin import band_buckets, bucket_pairs, hash_blocks
-from .core import query, t
+from .core import query, spread, t
 
 
 @query(
@@ -200,25 +200,6 @@ def _mm_params(doc_id: int) -> tuple[int, int, int, int, int, int, int]:
     return w, h, png_c, wav_nc, rate, n_frames, doc_id % 256
 
 
-def _spread_ids(docs: DataFrame) -> DataFrame:
-    """The (doc_id) input frame of a fixture encoder, spread to the
-    session's full parallelism.  The synth+decode mapInPandas chain
-    downstream is the expensive Python work of every multimodal query,
-    and a small corpus parquet arrives as ONE scan split (a 128 MB
-    maxPartitionBytes split swallows the whole file), which would
-    serialize that chain on a single core — guide §2.5 input skew:
-    "repartition immediately after the read".  The exchange this adds
-    moves 8 bytes/row; when the input already has >= defaultParallelism
-    partitions (a real corpus at scale, or a post-shuffle survivor
-    frame) it is a no-op, so the knob stays scale-adaptive rather than
-    tuned to local[32]."""
-    ids = docs.select("doc_id")
-    target = docs.sparkSession.sparkContext.defaultParallelism
-    if ids.rdd.getNumPartitions() < target:
-        ids = ids.repartition(target)
-    return ids
-
-
 def encode_fixture_assets(docs: DataFrame) -> DataFrame:
     """(doc_id) -> (asset_id, payload): synthesize a REAL PNG/BMP/WAV
     byte stream per document via the stdlib encoders.  Deliberately a
@@ -255,7 +236,7 @@ def encode_fixture_assets(docs: DataFrame) -> DataFrame:
                 }
             )
 
-    return _spread_ids(docs).mapInPandas(
+    return spread(docs.select("doc_id")).mapInPandas(
         _batches, schema="asset_id long, payload binary"
     )
 
@@ -1035,7 +1016,7 @@ def encode_video_assets(docs: DataFrame) -> DataFrame:
                 }
             )
 
-    return _spread_ids(docs).mapInPandas(
+    return spread(docs.select("doc_id")).mapInPandas(
         _batches, schema="asset_id long, payload binary"
     )
 
@@ -1335,7 +1316,7 @@ def encode_scenecut_video_assets(docs: DataFrame) -> DataFrame:
                 }
             )
 
-    return _spread_ids(docs).mapInPandas(
+    return spread(docs.select("doc_id")).mapInPandas(
         _batches, schema="asset_id long, payload binary"
     )
 

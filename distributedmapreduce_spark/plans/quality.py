@@ -17,6 +17,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
+from ..functions.text import tokens
 from .core import EVENTS_US, query, t
 
 _DAY_US = 86_400_000_000
@@ -249,10 +250,8 @@ def keyness_lang_drift(spark: SparkSession, sf: str) -> DataFrame:
     window or a sort."""
     toks = t(spark, sf, "documents").select(
         (F.col("lang") == "en").cast("long").alias("en"),
-        F.explode(
-            F.split(F.lower(F.col("text")), " ")
-        ).alias("word"),
-    ).filter(F.col("word") != "")
+        F.explode(tokens("text", lowercase=True)).alias("word"),
+    )
     wc = toks.groupBy("word").agg(
         F.sum("en").alias("c_en"),
         (F.count(F.lit(1)) - F.sum("en")).alias("c_ot"),

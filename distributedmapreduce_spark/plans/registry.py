@@ -67,18 +67,6 @@ def _round_of(path: str) -> int:
     return int(m.group(1)) if m else -1
 
 
-# Stale greens known-invalid under the current engine stack: these two
-# passed in r02 under pre-4.1 pyspark (nanos-as-long) but crashed on
-# 4.1.2's TIMESTAMP_NTZ parquet read (VERDICT r03).  The loader fix
-# landed in r04; their verdicts MUST be refreshed before they can
-# rejoin the round-robin green rotation, so pin them to the front of
-# the window until a post-r03 verdict exists.
-_FORCE_FRONT_UNTIL: dict[str, int] = {
-    "range_join_event_pairs": 3,
-    "window_lag_event_gaps": 3,
-}
-
-
 def _merged_verdicts() -> dict[str, tuple[bool, int, bool]]:
     """name -> (passed, round, rows_only), merged over every
     CORRECTNESS_r*.json in ascending round order so the newest verdict
@@ -115,14 +103,7 @@ def _merged_verdicts() -> dict[str, tuple[bool, int, bool]]:
 def _ordered(reg: dict[str, Query]) -> dict[str, Query]:
     verdicts = _merged_verdicts()
     failed = [n for n in reg if n in verdicts and not verdicts[n][0]]
-    pinned = [
-        n
-        for n, until in _FORCE_FRONT_UNTIL.items()
-        if n in reg
-        and n not in failed
-        and (n not in verdicts or verdicts[n][1] <= until)
-    ]
-    seen = {*failed, *pinned}
+    seen = set(failed)
     # a rows-only verdict for a query that HAS an oracle means the
     # oracle was added after the last driver check — the hash-grade
     # verdict is still outstanding, so treat it as never-checked
@@ -138,7 +119,7 @@ def _ordered(reg: dict[str, Query]) -> dict[str, Query]:
         (n for n in reg if n not in seen),
         key=lambda n: verdicts[n][1],
     )
-    return {n: reg[n] for n in (*failed, *pinned, *unchecked, *green)}
+    return {n: reg[n] for n in (*failed, *unchecked, *green)}
 
 
 def get_registry() -> dict[str, Query]:

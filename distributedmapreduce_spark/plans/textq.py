@@ -12,6 +12,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
+from ..functions.text import ngrams, norm_fingerprint, norm_text, tokens
 from .core import query, t
 
 _STOPWORDS = ("the", "a", "of", "to", "and", "in", "is", "on", "for", "with")
@@ -28,10 +29,6 @@ _LANG_MARKERS: dict[str, tuple[str, ...]] = {
 }
 
 
-def _tokens_col(col: str = "text"):
-    return F.filter(F.split(F.col(col), " "), lambda x: x != F.lit(""))
-
-
 @query(
     "doc_word_count",
     oracle="""
@@ -44,7 +41,7 @@ def doc_word_count(spark: SparkSession, sf: str) -> DataFrame:
     """The reference's word-count job (S13) over a document corpus."""
     docs = t(spark, sf, "documents")
     return (
-        docs.select(F.explode(_tokens_col()).alias("word"))
+        docs.select(F.explode(tokens("text")).alias("word"))
         .groupBy("word")
         .agg(F.count(F.lit(1)).alias("n"))
     )
@@ -69,7 +66,7 @@ def doc_inverted_index(spark: SparkSession, sf: str) -> DataFrame:
     # (Expand + two aggregates) over the full token stream — measured
     # 2.7x slower at sf0.1 for byte-identical output (r05)
     return (
-        docs.select("doc_id", F.explode(_tokens_col()).alias("word"))
+        docs.select("doc_id", F.explode(tokens("text")).alias("word"))
         .groupBy("word")
         .agg(F.sort_array(F.collect_set("doc_id")).alias("s"))
         .select(
@@ -117,7 +114,7 @@ def doc_inverted_index_segmented(spark: SparkSession, sf: str) -> DataFrame:
         docs.select(
             "doc_id",
             F.expr(f"doc_id div {_SEG_SIZE}").alias("segment"),
-            F.explode(_tokens_col()).alias("word"),
+            F.explode(tokens("text")).alias("word"),
         )
         .groupBy("word", "segment")
         .agg(F.sort_array(F.collect_set("doc_id")).alias("s"))
@@ -146,7 +143,7 @@ def doc_tf_topk(spark: SparkSession, sf: str) -> DataFrame:
     """Top-3 terms per document (term-frequency ranking)."""
     docs = t(spark, sf, "documents")
     tf = (
-        docs.select("doc_id", F.explode(_tokens_col()).alias("word"))
+        docs.select("doc_id", F.explode(tokens("text")).alias("word"))
         .groupBy("doc_id", "word")
         .agg(F.count(F.lit(1)).alias("tf"))
     )
@@ -178,7 +175,7 @@ def text_quality_scores(spark: SparkSession, sf: str) -> DataFrame:
     """Quality-scoring components used for corpus filtering: token
     count, type-token ratio, mean word length, stopword ratio."""
     docs = t(spark, sf, "documents")
-    ws = _tokens_col()
+    ws = tokens("text")
     n_tok = F.size(ws)
     n_dis = F.size(F.array_distinct(ws))
     total_len = F.aggregate(
@@ -252,7 +249,7 @@ def langid_heuristic(spark: SparkSession, sf: str) -> DataFrame:
     of its marker words occur in the document; argmax with
     alphabetical-language tiebreak (the CASE picks the first max)."""
     docs = t(spark, sf, "documents")
-    ws_distinct = F.array_distinct(_tokens_col())
+    ws_distinct = F.array_distinct(tokens("text"))
 
     def marker_hits(markers):
         # NB: factory, not a default-arg lambda — a two-parameter lambda
@@ -294,7 +291,7 @@ def token_count_regex(spark: SparkSession, sf: str) -> DataFrame:
         F.size(
             F.regexp_extract_all("text", F.lit("[a-zA-Z]+|[0-9]+|[^a-zA-Z0-9 ]"), 0)
         ).alias("n_bpe_ish"),
-        F.size(_tokens_col()).alias("n_ws"),
+        F.size(tokens("text")).alias("n_ws"),
     )
 
 
@@ -312,18 +309,12 @@ def doc_fingerprint(spark: SparkSession, sf: str) -> DataFrame:
     """Document fingerprints: md5 of whitespace-normalized text, and an
     order-insensitive bag-of-words fingerprint (dedup keys)."""
     docs = t(spark, sf, "documents")
-    norm = F.lower(F.trim(F.regexp_replace("text", " +", " ")))
     bag = F.array_join(
-        F.array_sort(
-            F.array_distinct(
-                F.filter(F.split(F.lower("text"), " "), lambda x: x != F.lit(""))
-            )
-        ),
-        " ",
+        F.array_sort(F.array_distinct(tokens("text", lowercase=True))), " "
     )
     return docs.select(
         "doc_id",
-        F.md5(norm).alias("fingerprint"),
+        norm_fingerprint("text").alias("fingerprint"),
         F.md5(bag).alias("bag_fingerprint"),
     )
 
@@ -350,7 +341,11 @@ def ngram_counts_top(spark: SparkSession, sf: str) -> DataFrame:
     bounds the shuffle at distinct-bigram cardinality)."""
     docs = t(spark, sf, "documents")
     return (
-        docs.select(F.explode(_repeated_bigrams_col()).alias("bigram"))
+        docs.select(
+            F.explode(ngrams(tokens("text", lowercase=True), 2)).alias(
+                "bigram"
+            )
+        )
         .groupBy("bigram")
         .agg(F.count(F.lit(1)).alias("n"))
         .orderBy(F.desc("n"), "bigram")
@@ -387,7 +382,8 @@ def doc_repetition_scores(spark: SparkSession, sf: str) -> DataFrame:
     aggregates, both partial-agg friendly."""
     docs = t(spark, sf, "documents")
     grams = docs.select(
-        "doc_id", F.explode(_repeated_bigrams_col()).alias("bigram")
+        "doc_id",
+        F.explode(ngrams(tokens("text", lowercase=True), 2)).alias("bigram"),
     )
     per = grams.groupBy("doc_id", "bigram").agg(F.count(F.lit(1)).alias("c"))
     return per.groupBy("doc_id").agg(
@@ -397,15 +393,6 @@ def doc_repetition_scores(spark: SparkSession, sf: str) -> DataFrame:
             "repetition_ratio"
         ),
     )
-
-
-def _repeated_bigrams_col():
-    """NON-distinct lowercase bigrams (shingles() dedups, repetition
-    scoring must not)."""
-    ws = F.filter(F.split(F.lower(F.col("text")), " "), lambda x: x != F.lit(""))
-    shifted = F.slice(ws, 2, F.greatest(F.size(ws) - 1, F.lit(0)))
-    pairs = F.zip_with(ws, shifted, lambda a, b: F.concat_ws(" ", a, b))
-    return F.slice(pairs, 1, F.greatest(F.size(ws) - 1, F.lit(0)))
 
 
 _SEARCH_TERMS = ("join", "filter", "window")
@@ -432,19 +419,15 @@ def search_multiword_and(spark: SparkSession, sf: str) -> DataFrame:
     docs = t(spark, sf, "documents")
     toks = docs.select(
         "doc_id",
-        F.explode(F.array_distinct(_tokens_col_lower())).alias("word"),
+        F.explode(
+            F.array_distinct(tokens("text", lowercase=True))
+        ).alias("word"),
     )
     return (
         toks.filter(F.col("word").isin(*_SEARCH_TERMS))
         .groupBy("doc_id")
         .agg(F.count(F.lit(1)).cast("int").alias("n_matched"))
         .filter(F.col("n_matched") == len(_SEARCH_TERMS))
-    )
-
-
-def _tokens_col_lower(col: str = "text"):
-    return F.filter(
-        F.split(F.lower(F.col(col)), " "), lambda x: x != F.lit("")
     )
 
 
@@ -480,7 +463,7 @@ def bm25_search(spark: SparkSession, sf: str) -> DataFrame:
     Top-20 with doc_id tiebreak for the deterministic oracle hash."""
     docs = t(spark, sf, "documents")
     toks = docs.select(
-        "doc_id", F.explode(_tokens_col_lower()).alias("word")
+        "doc_id", F.explode(tokens("text", lowercase=True)).alias("word")
     )
     # dl and tf are DOC-level aggregates with two consumers each
     # (stats + the scoring join; df + the scoring join) — persisting
@@ -567,7 +550,7 @@ def doc_winnow_fingerprints(spark: SparkSession, sf: str) -> DataFrame:
     import pandas as pd
 
     docs = t(spark, sf, "documents")
-    norm = F.lower(F.trim(F.regexp_replace("text", " +", " ")))
+    norm = norm_text("text")
     weights = np.array([31 ** (7 - j) for j in range(8)], dtype="int64")
 
     # exact int64 arithmetic (no overflow: 8 * 255 * 31^7 < 2^63), so
@@ -677,9 +660,7 @@ def gopher_quality_flags(spark: SparkSession, sf: str) -> DataFrame:
     distinct-bigram) then one row per doc; the final join is
     doc-keyed."""
     docs = t(spark, sf, "documents")
-    ws = F.filter(
-        F.split(F.lower("text"), " "), lambda x: x != F.lit("")
-    )
+    ws = tokens("text", lowercase=True)
     base = docs.select(
         "doc_id",
         ws.alias("ws"),
@@ -689,18 +670,7 @@ def gopher_quality_flags(spark: SparkSession, sf: str) -> DataFrame:
         .cast("long")
         .alias("stops"),
     ).filter(F.col("n") > 0)
-    bg = base.select(
-        "doc_id",
-        F.explode(
-            F.zip_with(
-                F.col("ws"),
-                F.slice(
-                    F.col("ws"), 2, F.greatest(F.size("ws") - 1, F.lit(0))
-                ),
-                lambda a, b: F.concat_ws(" ", a, b),
-            )
-        ).alias("b"),
-    ).filter(~F.col("b").rlike(" $") & F.col("b").contains(" "))
+    bg = base.select("doc_id", F.explode(ngrams(F.col("ws"), 2)).alias("b"))
     bgc = (
         bg.groupBy("doc_id", "b")
         .agg(F.count(F.lit(1)).alias("c"))
@@ -924,7 +894,7 @@ def retrieval_eval_first_rank(spark: SparkSession, sf: str) -> DataFrame:
     ]
     q = spark.createDataFrame(q_rows, "qid long, w string, n_terms long")
     toks = t(spark, sf, "documents").select(
-        "doc_id", F.explode(_tokens_col_lower()).alias("w")
+        "doc_id", F.explode(tokens("text", lowercase=True)).alias("w")
     )
     sc = (
         toks.join(F.broadcast(q), "w")
@@ -1080,7 +1050,7 @@ def ndcg_at_10(spark: SparkSession, sf: str) -> DataFrame:
     ]
     q = spark.createDataFrame(q_rows, "qid long, w string, n_terms long")
     toks = t(spark, sf, "documents").select(
-        "doc_id", F.explode(_tokens_col_lower()).alias("w")
+        "doc_id", F.explode(tokens("text", lowercase=True)).alias("w")
     )
     sc = (
         toks.join(F.broadcast(q), "w")
@@ -1196,9 +1166,7 @@ def rake_keyword_scores(spark: SparkSession, sf: str) -> DataFrame:
     TakeOrdered sort-limit, not a global rank window."""
     toks = t(spark, sf, "documents").select(
         "doc_id",
-        F.filter(
-            F.split(F.lower("text"), " "), lambda x: x != ""
-        ).alias("ws"),
+        tokens("text", lowercase=True).alias("ws"),
     )
     pos = toks.select(
         "doc_id", F.posexplode("ws").alias("pos", "w")

@@ -50,3 +50,28 @@ def test_replica_fingerprint_tracks_content(tmp_path):
     assert replica_fingerprint(str(d)) == fp1
     (d / "t.parquet").write_bytes(b"abcd")  # size change re-keys
     assert replica_fingerprint(str(d)) != fp1
+
+
+def test_normalize_strips_lambda_variable_counters():
+    """PySpark suffixes each lambda variable with a JVM-global counter,
+    so the same query built after more lambdas prints a different
+    name; the key must not depend on what was built before it."""
+    a = normalize_plan(
+        "Filter size(filter(ws#12, lambdafunction(NOT (lambda x_165#300 = ),"
+        " lambda x_165#300, false)), true) > 0",
+        "/d",
+    )
+    b = normalize_plan(
+        "Filter size(filter(ws#12, lambdafunction(NOT (lambda x_7#31 = ),"
+        " lambda x_7#31, false)), true) > 0",
+        "/d",
+    )
+    assert a == b
+    assert "lambda x#" in a and "x_165" not in a
+    # the variable's own name still counts
+    c = normalize_plan(
+        "Filter size(filter(ws#12, lambdafunction(NOT (lambda y_7#31 = ),"
+        " lambda y_7#31, false)), true) > 0",
+        "/d",
+    )
+    assert a != c

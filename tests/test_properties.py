@@ -4,9 +4,10 @@ plus the structural invariants."""
 
 from __future__ import annotations
 
-from hypothesis import HealthCheck, given, settings
+from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
 
+from distributedmapreduce_spark.functions import text as FT
 from distributedmapreduce_spark.operators import text as T
 
 from .reference_replay import replay_lines, replay_tokens
@@ -56,6 +57,59 @@ def test_aggregate_invariants(spark, doc):
     for r in (3, 5):
         parts = {w: len(w) % r for w in wc}
         assert all(parts[w] == len(w) % r for w in wc)
+
+
+def _split_replay(s, lowercase=False):
+    """The reference tokenizer (mapper_word_count.py:16-18): split on
+    single spaces, drop the empty tokens."""
+    if s is None:
+        return None
+    return [w for w in (s.lower() if lowercase else s).split(" ") if w]
+
+
+def _ngram_replay(ws, n):
+    if ws is None:
+        return None
+    return [" ".join(ws[i : i + n]) for i in range(len(ws) - n + 1)]
+
+
+# space runs, leading/trailing spaces, "" and NULL, mixed case
+text_st = st.one_of(st.none(), st.text(alphabet="aB c  ", max_size=16))
+
+
+@settings(
+    max_examples=12,
+    deadline=None,
+    suppress_health_check=[HealthCheck.function_scoped_fixture],
+)
+@given(corpus=st.lists(text_st, min_size=1, max_size=12))
+@example(corpus=[None, "", " ", "   ", "  a  b ", "A  b c ", "a a a a"])
+def test_text_functions_match_split_replay(spark, corpus):
+    """functions/text.py's tokens (both cases), ngrams and shingles
+    against a pure-Python str.split(" ")-and-drop-empties replay."""
+    from pyspark.sql.types import ArrayType, StringType
+
+    df = spark.createDataFrame(list(enumerate(corpus)), "i long, text string")
+    ws = FT.tokens("text")
+    cols = [ws.alias("t"), FT.tokens("text", lowercase=True).alias("tl")]
+    for n in (1, 2, 3):
+        cols += [
+            FT.ngrams(ws, n).alias(f"g{n}"),
+            FT.shingles("text", n).alias(f"s{n}"),
+        ]
+    out = df.select("i", *cols)
+    assert out.schema["t"].dataType == ArrayType(StringType(), False)
+    got = {r.i: r for r in out.collect()}
+    for i, s in enumerate(corpus):
+        r = got[i]
+        assert r.t == _split_replay(s)
+        assert r.tl == _split_replay(s, lowercase=True)
+        for n in (1, 2, 3):
+            assert r[f"g{n}"] == _ngram_replay(_split_replay(s), n)
+            grams = _ngram_replay(_split_replay(s, lowercase=True), n)
+            # array_distinct keeps each value's first occurrence
+            want = None if grams is None else list(dict.fromkeys(grams))
+            assert r[f"s{n}"] == want
 
 
 def _canon_rows(df):

@@ -40,38 +40,28 @@ def test_registry_self_prioritization_order():
     assert _round_of("CORRECTNESS_r02.json") == 2
     assert _round_of("/x/CORRECTNESS_r10.json") == 10  # not lexicographic
 
-    from distributedmapreduce_spark.plans.registry import _FORCE_FRONT_UNTIL
-
     verdicts = _merged_verdicts()
     if not verdicts:  # fresh checkout without artifacts
         return
     reg = get_registry()
     names = list(reg)
     failed = {n for n in names if n in verdicts and not verdicts[n][0]}
-    pinned = {
-        n
-        for n, until in _FORCE_FRONT_UNTIL.items()
-        if n in reg
-        and n not in failed
-        and (n not in verdicts or verdicts[n][1] <= until)
-    }
     # never driver-checked, or rows-only-checked before gaining an
     # oracle (the hash verdict is still outstanding)
     unchecked = {
         n
         for n in names
         if n not in failed
-        and n not in pinned
         and (
             n not in verdicts
             or (verdicts[n][2] and reg[n].oracle is not None)
         )
     }
-    head = names[: len(failed) + len(pinned) + len(unchecked)]
-    assert set(head) == failed | pinned | unchecked
+    head = names[: len(failed) + len(unchecked)]
+    assert set(head) == failed | unchecked
     assert set(head[: len(failed)]) == failed
     # greens are non-decreasing in verdict round (stalest first)
-    tail = names[len(failed) + len(pinned) + len(unchecked):]
+    tail = names[len(failed) + len(unchecked):]
     green_rounds = [verdicts[n][1] for n in tail]
     assert green_rounds == sorted(green_rounds)
 

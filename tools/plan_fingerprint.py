@@ -44,6 +44,14 @@ Why each component:
 Building every registry frame at sf0.001 does run the driver-side
 loops of iterative queries (kmeans etc. collect at build time), but
 at sf0.001 that is seconds — vs the hours the cache saves at 100x.
+
+Usage:
+    python3 tools/plan_fingerprint.py [QUERY ...]               # keys
+    python3 tools/plan_fingerprint.py --components [QUERY ...]
+    python3 tools/plan_fingerprint.py --plans [QUERY ...]       # plans
+
+``--plans`` prints name -> normalized analyzed plan; run it in two
+checkouts and diff the outputs to see which plans a change touched.
 """
 
 from __future__ import annotations
@@ -61,6 +69,9 @@ sys.path.insert(0, _REPO)
 FP_SF = "/root/testdata/sf0.001"
 
 _ID_RE = re.compile(r"#\d+")
+# PySpark names a lambda variable ``x_<n>`` from a JVM-global counter,
+# so the suffix counts the lambdas built earlier in the session
+_LAMBDA_RE = re.compile(r"(lambda \w+?)_\d+#")
 _ADDR_RE = re.compile(r"0x[0-9a-fA-F]+")
 _AT_RE = re.compile(r"@[0-9a-fA-F]{6,}")
 
@@ -78,6 +89,7 @@ def normalize_plan(plan: str, sf_dir: str) -> str:
     plan = plan.replace(os.path.realpath(sf_dir), "<SF>")
     plan = plan.replace(sf_dir, "<SF>")
     plan = _ID_RE.sub("#", plan)
+    plan = _LAMBDA_RE.sub(r"\1#", plan)
     plan = _ADDR_RE.sub("0x", plan)
     return _AT_RE.sub("@", plan)
 
@@ -172,18 +184,27 @@ def replica_fingerprint(sf_dir: str) -> str:
     return _sha("\n".join(parts))[:16]
 
 
+def _plan_session(app_name: str):
+    """A session whose plan strings list every field: by default Spark
+    elides all but 25 entries of a long list ("... 39 more fields"),
+    and a change to the elided entries would not show in the plan."""
+    from distributedmapreduce_spark.session import get_spark
+
+    spark = get_spark(app_name=app_name, cpus=8)
+    spark.conf.set("spark.sql.debug.maxToStringFields", 1 << 20)
+    return spark
+
+
 def query_fingerprints(names=None, fp_sf: str = FP_SF) -> dict[str, str | None]:
     """Return name -> key (None where fingerprinting failed; a None
     key never cache-hits, so failures degrade to fresh runs)."""
     from distributedmapreduce_spark.plans.registry import get_registry
-    from distributedmapreduce_spark.session import get_spark
-
     reg = get_registry()
     if names is None:
         names = sorted(reg)
     harness = _file_sha(os.path.join(_HERE, "check_oracle.py"))
     session_sha = _file_sha(os.path.join(_PKG_ROOT, "session.py"))
-    spark = get_spark(app_name="plan_fingerprint", cpus=8)
+    spark = _plan_session("plan_fingerprint")
     src_cache: dict[str, str] = {}
     clo_cache: dict[str, str] = {}
     out: dict[str, str | None] = {}
@@ -238,13 +259,11 @@ def query_components(names=None, fp_sf: str = FP_SF) -> dict[str, dict]:
     Python stage or an artifact read keep the strict module-level
     keying (``seedable: False``)."""
     from distributedmapreduce_spark.plans.registry import get_registry
-    from distributedmapreduce_spark.session import get_spark
-
     reg = get_registry()
     if names is None:
         names = sorted(reg)
     harness = _file_sha(os.path.join(_HERE, "check_oracle.py"))
-    spark = get_spark(app_name="plan_components", cpus=8)
+    spark = _plan_session("plan_components")
     out: dict[str, dict] = {}
     for name in names:
         q = reg[name]
@@ -275,12 +294,37 @@ def query_components(names=None, fp_sf: str = FP_SF) -> dict[str, dict]:
     return out
 
 
+def query_plans(names=None, fp_sf: str = FP_SF) -> dict[str, str | None]:
+    """name -> normalized analyzed plan (None where the build failed),
+    for diffing the dumps of two checkouts.  Analyzed, not optimized:
+    the optimizer's rewrites (e.g. the group-id literal of a
+    distinct-aggregate Expand) can differ between two builds of one
+    query in one checkout."""
+    from distributedmapreduce_spark.plans.registry import get_registry
+    reg = get_registry()
+    if names is None:
+        names = sorted(reg)
+    spark = _plan_session("plan_dump")
+    out: dict[str, str | None] = {}
+    for name in names:
+        try:
+            df = reg[name].fn(spark, fp_sf)
+            out[name] = normalize_plan(
+                df._jdf.queryExecution().analyzed().toString(), fp_sf
+            )
+        except Exception as e:  # noqa: BLE001 — report and go on
+            print(f"plan FAILED for {name}: {e!r}", file=sys.stderr)
+            out[name] = None
+    return out
+
+
 if __name__ == "__main__":
     import json
 
-    if len(sys.argv) > 1 and sys.argv[1] == "--components":
+    modes = {"--components": query_components, "--plans": query_plans}
+    if len(sys.argv) > 1 and sys.argv[1] in modes:
         print(json.dumps(
-            query_components(sys.argv[2:] or None), indent=1,
+            modes[sys.argv[1]](sys.argv[2:] or None), indent=1,
             sort_keys=True,
         ))
     else:
