@@ -6,6 +6,7 @@ from .text import (
     shingles,
     tokens,
 )
+from .similarity import hamming, jaccard, jaccard_e6, pair_cosine
 from .vector import cosine, dot, l2_norm
 
 __all__ = [
@@ -15,6 +16,10 @@ __all__ = [
     "tokens",
     "norm_fingerprint",
     "norm_text",
+    "hamming",
+    "jaccard",
+    "jaccard_e6",
+    "pair_cosine",
     "cosine",
     "dot",
     "l2_norm",

@@ -1,11 +1,13 @@
-"""Candidate-pair generation for similarity joins: one shared primitive.
+"""The two phases of a similarity join: candidate pairs, then their
+features for verification.
 
 Every near-dup family in the engine is the paper's map -> hash-shuffle
 -> reduce dataflow used as a two-phase similarity join (V-SMART-Join,
 PAPERS.md): a candidate phase that hashes each record into buckets and
 pairs records sharing a bucket, then a verify phase that computes the
-exact similarity of each candidate pair.  This module is the candidate
-phase; verification stays with each query, since it is what differs.
+exact similarity of each candidate pair.  This module holds both
+phases' dataflow; the similarity rule and its threshold stay with each
+query (the shared rules live in functions/similarity.py).
 
 ``band_buckets`` : one row per (record, band) — the LSH band explode.
 ``hash_blocks``  : an integer hash split into equal bit-blocks, the
@@ -13,6 +15,15 @@ phase; verification stays with each query, since it is what differs.
                    within Hamming distance n-1 share a block).
 ``bucket_pairs`` : the ordered pairs (a < b) of records that share a
                    bucket, each pair once.
+``pair_sides``   : the verify join — every feature of both records of
+                   each pair, as ``<col>_a`` and ``<col>_b``.
+
+Two sites carry their features through their own blocking self-join
+instead of verifying a pair table, and so do not call ``pair_sides``:
+``dedup_simhash`` (the signature rides the block join into the
+Hamming test) and ``semdedup_cluster_prune`` (the vectors ride the
+within-cluster join into the cosine filter, before the keeper
+aggregate).
 
 ``bucket_pairs`` is an equi self-join on the bucket key rather than a
 ``collect_list`` per bucket followed by a pairwise array explode.  The
@@ -68,4 +79,37 @@ def bucket_pairs(
         .filter(F.col(a) < F.col(b))
         .select(a, b)
         .dropDuplicates([a, b])
+    )
+
+
+def pair_sides(
+    pairs: DataFrame, feats: DataFrame, id_col: str, a: str, b: str
+) -> DataFrame:
+    """``pairs`` with every non-``id_col`` column ``x`` of ``feats``
+    attached twice: ``x_a`` from the row whose ``id_col`` equals the
+    pair's ``a``, ``x_b`` from ``b``'s.  Columns come out as ``pairs``'
+    columns, then the ``_a`` features, then the ``_b`` features.
+
+    Two inner equi-joins: a pair with a side missing from ``feats`` is
+    dropped, and ``feats`` must hold one row per id or its pairs
+    repeat.  Both joins read the same ``feats`` frame, so callers
+    persist it when its lineage is expensive, and a caller that wants
+    both feature sides broadcast passes ``F.broadcast(feats)`` (the
+    hint reaches both joins through the renaming projections)."""
+    cols = [c for c in feats.columns if c != id_col]
+
+    def side(key: str, sfx: str) -> DataFrame:
+        return feats.select(
+            F.col(id_col).alias(key),
+            *[F.col(c).alias(f"{c}_{sfx}") for c in cols],
+        )
+
+    return (
+        pairs.join(side(a, "a"), a)
+        .join(side(b, "b"), b)
+        .select(
+            *pairs.columns,
+            *[f"{c}_a" for c in cols],
+            *[f"{c}_b" for c in cols],
+        )
     )

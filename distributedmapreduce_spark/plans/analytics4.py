@@ -17,6 +17,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
+from ..operators.simjoin import pair_sides
 from .core import EVENTS_US, query, t
 
 _DD_QS = (50, 90, 99)
@@ -1128,16 +1129,8 @@ def dedup_containment_prefix(spark: SparkSession, sf: str) -> DataFrame:
         .select("doc_a", "doc_b", "n_a")
         .distinct()
     )
-    sets = docs.select("doc_id", "sh")
     verified = (
-        cand.join(
-            sets.select(F.col("doc_id").alias("doc_a"), F.col("sh").alias("sh_a")),
-            "doc_a",
-        )
-        .join(
-            sets.select(F.col("doc_id").alias("doc_b"), F.col("sh").alias("sh_b")),
-            "doc_b",
-        )
+        pair_sides(cand, docs.select("doc_id", "sh"), "doc_id", "doc_a", "doc_b")
         .withColumn(
             "n_inter",
             F.size(F.array_intersect("sh_a", "sh_b")).cast("long"),

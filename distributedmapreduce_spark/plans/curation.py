@@ -17,7 +17,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
+from ..functions.similarity import jaccard_e6
 from ..functions.text import norm_fingerprint, shingles, tokens
+from ..operators.simjoin import pair_sides
 from .core import EVENTS_US, query, spread, t
 from .llm3 import _md5_uniform, _md5_uniform_sql
 
@@ -1499,7 +1501,6 @@ def curation_pipeline_v4(spark: SparkSession, sf: str) -> DataFrame:
     from .llm import (
         _PMH_TAU_E6,
         _pmh_candidates,
-        _pmh_jac_e6,
         _pmh_signatures,
     )
     from .mmq import (
@@ -1587,16 +1588,11 @@ def curation_pipeline_v4(spark: SparkSession, sf: str) -> DataFrame:
             spread(k2.select("doc_id", "text"))
         ).localCheckpoint(eager=False)
         cand = _pmh_candidates(msig, persist_bands=False)
-        a = msig.select(
-            F.col("doc_id").alias("doc_a"), F.col("hs").alias("ha")
-        )
-        b = msig.select(
-            F.col("doc_id").alias("doc_b"), F.col("hs").alias("hb")
-        )
         mdrops = (
-            cand.join(a, "doc_a")
-            .join(b, "doc_b")
-            .select("doc_b", _pmh_jac_e6().alias("jac_e6"))
+            pair_sides(
+                cand, msig.select("doc_id", "hs"), "doc_id", "doc_a", "doc_b"
+            )
+            .select("doc_b", jaccard_e6("hs_a", "hs_b").alias("jac_e6"))
             .filter(F.col("jac_e6") >= _PMH_TAU_E6)
             .select(F.col("doc_b").alias("doc_id"))
             .distinct()

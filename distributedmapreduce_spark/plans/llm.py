@@ -21,6 +21,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
+from ..functions.similarity import hamming, jaccard, jaccard_e6, pair_cosine
 from ..functions.text import (
     norm_fingerprint,
     shingles as _shingles,
@@ -30,10 +31,9 @@ from ..functions.vector import (  # noqa: F401
     cosine as _cosine,
     dot as _dot,
     l2_norm as _norm,
-    pair_dot as _pair_dot,
 )
 from ..operators.index_store import cached_index, merge_index
-from ..operators.simjoin import band_buckets, bucket_pairs
+from ..operators.simjoin import band_buckets, bucket_pairs, pair_sides
 from .core import query, spread, t
 
 # --------------------------------------------------------------------------
@@ -228,7 +228,8 @@ def minhash_band_buckets(signatures: DataFrame) -> DataFrame:
 def dedup_minhash_lsh(spark: SparkSession, sf: str) -> DataFrame:
     """MinHash + LSH near-dup: 16 minhashes over 3-gram shingles, 4
     bands of 4; candidate pairs share >= 1 band bucket; candidates are
-    verified with exact Jaccard >= 0.12 over the hashed shingle sets.
+    verified over the hashed shingle sets: exact Jaccard rounded to 4
+    decimals, kept when the rounded value is >= 0.12.
 
     Formulated as explode -> ONE hash-aggregate: each shingle string is
     hashed once (xxhash64), then the 16 minhash permutations are plain
@@ -279,14 +280,9 @@ def dedup_minhash_lsh(spark: SparkSession, sf: str) -> DataFrame:
         .join(F.broadcast(touched), "doc_id")
         .persist()
     )
-    sh_a = sets.select(F.col("doc_id").alias("doc_a"), F.col("hs").alias("sh_a"))
-    sh_b = sets.select(F.col("doc_id").alias("doc_b"), F.col("hs").alias("sh_b"))
-    verified = cand.join(sh_a, "doc_a").join(sh_b, "doc_b")
-    inter = F.size(F.array_intersect("sh_a", "sh_b"))
-    union = F.size("sh_a") + F.size("sh_b") - inter
-    jac = inter.cast("double") / union
+    verified = pair_sides(cand, sets, "doc_id", "doc_a", "doc_b")
     return (
-        verified.withColumn("jaccard", F.round(jac, 4))
+        verified.withColumn("jaccard", F.round(jaccard("hs_a", "hs_b"), 4))
         .filter(F.col("jaccard") >= 0.12)
         .select("doc_a", "doc_b", "jaccard")
     )
@@ -379,10 +375,8 @@ def dedup_simhash(spark: SparkSession, sf: str) -> DataFrame:
         .filter(F.col("doc_a") < F.col("doc_b"))
         .dropDuplicates(["doc_a", "doc_b"])
     )
-    xor = F.col("sig_a").bitwiseXOR(F.col("sig_b"))
-    hamming = F.bit_count(xor)
     return (
-        cand.withColumn("hamming", hamming)
+        cand.withColumn("hamming", hamming("sig_a", "sig_b"))
         .filter(F.col("hamming") <= 4)
         .select("doc_a", "doc_b", "hamming")
     )
@@ -710,26 +704,9 @@ def dedup_embedding_cosine(spark: SparkSession, sf: str) -> DataFrame:
     # once per candidate pair (787k at sf0.1) and the HOF fold is
     # CodegenFallback — see functions/vector.py::pair_dot for the
     # bit-identity argument (same left-to-right IEEE order)
-    cos = _pair_dot(F.col("e_a"), F.col("e_b")) / (
-        F.col("n_a") * F.col("n_b")
-    )
+    cos = pair_cosine("embedding_a", "embedding_b", "nrm_a", "nrm_b")
     return (
-        cand.join(
-            n.select(
-                F.col("vec_id").alias("vec_a"),
-                F.col("embedding").alias("e_a"),
-                F.col("nrm").alias("n_a"),
-            ),
-            "vec_a",
-        )
-        .join(
-            n.select(
-                F.col("vec_id").alias("vec_b"),
-                F.col("embedding").alias("e_b"),
-                F.col("nrm").alias("n_b"),
-            ),
-            "vec_b",
-        )
+        pair_sides(cand, n, "vec_id", "vec_a", "vec_b")
         .filter(cos >= 0.4)
         .select("vec_a", "vec_b", F.round(cos, 4).alias("cosine"))
     )
@@ -1037,13 +1014,10 @@ def dedup_minhash_portable(spark: SparkSession, sf: str) -> DataFrame:
     grouped = _pmh_signatures(t(spark, sf, "documents"))
     cand = _pmh_candidates(grouped)
     sets = grouped.select("doc_id", "hs")
-    a = sets.select(F.col("doc_id").alias("doc_a"), F.col("hs").alias("ha"))
-    b = sets.select(F.col("doc_id").alias("doc_b"), F.col("hs").alias("hb"))
-    joined = cand.join(a, "doc_a").join(b, "doc_b")
     return (
-        joined.select(
-            "doc_a", "doc_b", _pmh_jac_e6().alias("jac_e6")
-        ).filter(F.col("jac_e6") >= _PMH_TAU_E6)
+        pair_sides(cand, sets, "doc_id", "doc_a", "doc_b")
+        .select("doc_a", "doc_b", jaccard_e6("hs_a", "hs_b").alias("jac_e6"))
+        .filter(F.col("jac_e6") >= _PMH_TAU_E6)
     )
 
 
@@ -1064,12 +1038,6 @@ def _pmh_signatures(docs: DataFrame) -> DataFrame:
             for i in range(_PMH_N)
         ],
     )
-
-
-def _pmh_jac_e6() -> F.Column:
-    inter = F.size(F.array_intersect("ha", "hb"))
-    union = F.size("ha") + F.size("hb") - inter
-    return F.floor(inter / union.cast("double") * 1e6).cast("long")
 
 
 def _pmh_bands() -> list[F.Column]:
@@ -1214,13 +1182,10 @@ def minhash_index_incremental_update(spark: SparkSession, sf: str) -> DataFrame:
     merged = base.unionByName(delta)
     cand = _pmh_delta_candidates(merged)
     sets = merged.select("doc_id", "hs")
-    a = sets.select(F.col("doc_id").alias("doc_a"), F.col("hs").alias("ha"))
-    b = sets.select(F.col("doc_id").alias("doc_b"), F.col("hs").alias("hb"))
-    joined = cand.join(a, "doc_a").join(b, "doc_b")
     return (
-        joined.select(
-            "doc_a", "doc_b", _pmh_jac_e6().alias("jac_e6")
-        ).filter(F.col("jac_e6") >= _PMH_TAU_E6)
+        pair_sides(cand, sets, "doc_id", "doc_a", "doc_b")
+        .select("doc_a", "doc_b", jaccard_e6("hs_a", "hs_b").alias("jac_e6"))
+        .filter(F.col("jac_e6") >= _PMH_TAU_E6)
     )
 
 
@@ -1517,12 +1482,9 @@ def psh_pairs(docs: DataFrame) -> DataFrame:
         .select("pair.doc_a", "pair.doc_b")
         .dropDuplicates(["doc_a", "doc_b"])
     )
-    a = sig.select(F.col("doc_id").alias("doc_a"), F.col("sig").alias("sa"))
-    b = sig.select(F.col("doc_id").alias("doc_b"), F.col("sig").alias("sb"))
-    ham = F.bit_count(F.col("sa").bitwiseXOR(F.col("sb")))
+    ham = hamming("sig_a", "sig_b")
     return (
-        cand.join(a, "doc_a")
-        .join(b, "doc_b")
+        pair_sides(cand, sig, "doc_id", "doc_a", "doc_b")
         .select("doc_a", "doc_b", ham.cast("long").alias("hamming"))
         .filter(F.col("hamming") <= _PSH_HAM)
     )
@@ -2006,12 +1968,9 @@ def minhash_recall_audit(spark: SparkSession, sf: str) -> DataFrame:
         )
         .distinct()
     )
-    x = sig.select(F.col("doc_id").alias("doc_a"), F.col("hs").alias("ha"))
-    y = sig.select(F.col("doc_id").alias("doc_b"), F.col("hs").alias("hb"))
     truep = (
-        tp0.join(x, "doc_a")
-        .join(y, "doc_b")
-        .filter(_pmh_jac_e6() >= _PMH_TAU_E6)
+        pair_sides(tp0, sig.select("doc_id", "hs"), "doc_id", "doc_a", "doc_b")
+        .filter(jaccard_e6("hs_a", "hs_b") >= _PMH_TAU_E6)
         .select("doc_a", "doc_b")
     )
     cand = _pmh_candidates(sig)
@@ -2281,21 +2240,13 @@ def dedup_minhash_classes(spark: SparkSession, sf: str) -> DataFrame:
     cand = bucket_pairs(
         band_buckets(cls, ["rep"], _pmh_class_bands()), "rep", "rep_a", "rep_b"
     )
-    a = cls.select(
-        F.col("rep").alias("rep_a"),
-        F.col("n").alias("n_a"),
-        F.col("hs").alias("ha"),
+    joined = pair_sides(
+        cand, F.broadcast(cls.select("rep", "n", "hs")), "rep", "rep_a", "rep_b"
     )
-    b = cls.select(
-        F.col("rep").alias("rep_b"),
-        F.col("n").alias("n_b"),
-        F.col("hs").alias("hb"),
-    )
-    joined = cand.join(F.broadcast(a), "rep_a").join(F.broadcast(b), "rep_b")
     return joined.select(
         F.col("rep_a").cast("long"),
         F.col("rep_b").cast("long"),
-        _pmh_jac_e6().alias("jac_e6"),
+        jaccard_e6("hs_a", "hs_b").alias("jac_e6"),
         F.col("n_a").cast("long"),
         F.col("n_b").cast("long"),
         (F.col("n_a") * F.col("n_b")).cast("long").alias("n_doc_pairs"),
@@ -2436,21 +2387,11 @@ def dedup_jaccard_classes(spark: SparkSession, sf: str) -> DataFrame:
         "rep", F.explode(F.slice(F.col("hss"), F.lit(1), plen)).alias("h")
     ).persist()
     cand = bucket_pairs(pref, "rep", "rep_a", "rep_b", on=("h",))
-    a = cls.select(
-        F.col("rep").alias("rep_a"),
-        F.col("n").alias("n_a"),
-        F.col("hss").alias("ha"),
-    )
-    b = cls.select(
-        F.col("rep").alias("rep_b"),
-        F.col("n").alias("n_b"),
-        F.col("hss").alias("hb"),
-    )
-    joined = cand.join(F.broadcast(a), "rep_a").join(F.broadcast(b), "rep_b")
+    joined = pair_sides(cand, F.broadcast(cls), "rep", "rep_a", "rep_b")
     return joined.select(
         F.col("rep_a").cast("long"),
         F.col("rep_b").cast("long"),
-        _pmh_jac_e6().alias("jac_e6"),
+        jaccard_e6("hss_a", "hss_b").alias("jac_e6"),
         F.col("n_a").cast("long"),
         F.col("n_b").cast("long"),
         (F.col("n_a") * F.col("n_b")).cast("long").alias("n_doc_pairs"),

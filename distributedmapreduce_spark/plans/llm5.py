@@ -33,6 +33,7 @@ from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from ..functions.text import shingles as _shingles, tokens as _tokens
+from ..operators.simjoin import pair_sides
 from .core import EVENTS_US, query, spread, t
 from .llm3 import _md5_u32, _md5_u32_sql, _md5_uniform, _md5_uniform_sql
 
@@ -164,14 +165,11 @@ def set_similarity_prefix_join(spark: SparkSession, sf: str) -> DataFrame:
     )
     sets = docs.select("doc_id", "sh", "n_sh")
     verified = (
-        cand.join(sets.select(F.col("doc_id").alias("doc_a"),
-                              F.col("sh").alias("sh_a"),
-                              F.col("n_sh").alias("n_a")), "doc_a")
-        .join(sets.select(F.col("doc_id").alias("doc_b"),
-                          F.col("sh").alias("sh_b"),
-                          F.col("n_sh").alias("n_b")), "doc_b")
+        pair_sides(cand, sets, "doc_id", "doc_a", "doc_b")
         .withColumn("n_inter", F.size(F.array_intersect("sh_a", "sh_b")))
-        .withColumn("n_union", F.col("n_a") + F.col("n_b") - F.col("n_inter"))
+        .withColumn(
+            "n_union", F.col("n_sh_a") + F.col("n_sh_b") - F.col("n_inter")
+        )
         .filter(F.col("n_inter") * _SSJ_DEN >= _SSJ_NUM * F.col("n_union"))
     )
     return verified.select(

@@ -30,12 +30,13 @@ from .llm import (
     _EMB_LSH_BANDS,
     embedding_band_buckets,
 )
+from ..functions.similarity import pair_cosine
 from ..functions.vector import (
     cosine as _cosine,
     dot as _dot,
     l2_norm as _norm,
-    pair_dot as _pair_dot,
 )
+from ..operators.simjoin import pair_sides
 from .mlops import (
     _KM_K_CTE,
     _KM_KX,
@@ -212,9 +213,7 @@ def semdedup_cluster_prune(spark: SparkSession, sf: str) -> DataFrame:
     # Arrow-batched sequential dot for the within-cluster pair filter
     # (opt r14 — Σ|c|² candidate rows; bit-identical to the HOF fold,
     # see functions/vector.py::pair_dot)
-    cos = _pair_dot(F.col("e_a"), F.col("e_b")) / (
-        F.col("n_a") * F.col("n_b")
-    )
+    cos = pair_cosine("e_a", "e_b", "n_a", "n_b")
     pr = (
         a.join(b, "cluster")
         .filter(F.col("keep_cand") < F.col("pruned"))
@@ -729,27 +728,10 @@ def hard_negative_mining(spark: SparkSession, sf: str) -> DataFrame:
     # Arrow-batched sequential dot on the candidate-bounded verify
     # stage (opt r14; bit-identical — functions/vector.py::pair_dot)
     cos_e6 = F.floor(
-        _pair_dot(F.col("e_a"), F.col("e_b"))
-        / (F.col("n_a") * F.col("n_b"))
-        * 1_000_000
+        pair_cosine("embedding_a", "embedding_b", "nrm_a", "nrm_b") * 1_000_000
     ).cast("long")
     p = (
-        cand.join(
-            n.select(
-                F.col("vec_id").alias("anchor"),
-                F.col("embedding").alias("e_a"),
-                F.col("nrm").alias("n_a"),
-            ),
-            "anchor",
-        )
-        .join(
-            n.select(
-                F.col("vec_id").alias("neg"),
-                F.col("embedding").alias("e_b"),
-                F.col("nrm").alias("n_b"),
-            ),
-            "neg",
-        )
+        pair_sides(cand, n, "vec_id", "anchor", "neg")
         .select(
             "anchor",
             "label",

@@ -13,7 +13,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
-from ..operators.simjoin import band_buckets, bucket_pairs, hash_blocks
+from ..functions.similarity import hamming
+from ..operators.simjoin import (
+    band_buckets,
+    bucket_pairs,
+    hash_blocks,
+    pair_sides,
+)
 from .core import query, spread, t
 
 
@@ -572,17 +578,12 @@ def dedup_phash_images(spark: SparkSession, sf: str) -> DataFrame:
     cand = bucket_pairs(
         phash_block_buckets(sig), "asset_id", "asset_a", "asset_b"
     )
-    a = sig.select(F.col("asset_id").alias("asset_a"), F.col("ph").alias("pa"))
-    b = sig.select(F.col("asset_id").alias("asset_b"), F.col("ph").alias("pb"))
     return (
-        cand.join(a, "asset_a")
-        .join(b, "asset_b")
+        pair_sides(cand, sig, "asset_id", "asset_a", "asset_b")
         .select(
             "asset_a",
             "asset_b",
-            F.bit_count(F.col("pa").bitwiseXOR(F.col("pb")))
-            .cast("long")
-            .alias("hamming"),
+            hamming("ph_a", "ph_b").cast("long").alias("hamming"),
         )
         .filter(F.col("hamming") <= _PHASH_HAM)
     )
@@ -698,29 +699,14 @@ def _hash_class_pairs(
         bucket_pairs(
             phash_distinct_block_buckets(cls, bits), "ph", "ph_a", "ph_b"
         )
-        .filter(
-            F.bit_count(F.col("ph_a").bitwiseXOR(F.col("ph_b"))) <= ham
-        )
-    )
-    a = cls.select(
-        F.col("ph").alias("ph_a"),
-        F.col("n").alias("n_a"),
-        F.col("rep").alias("rep_a"),
-    )
-    b = cls.select(
-        F.col("ph").alias("ph_b"),
-        F.col("n").alias("n_b"),
-        F.col("rep").alias("rep_b"),
+        .filter(hamming("ph_a", "ph_b") <= ham)
     )
     return (
-        cand.join(F.broadcast(a), "ph_a")
-        .join(F.broadcast(b), "ph_b")
+        pair_sides(cand, F.broadcast(cls), "ph", "ph_a", "ph_b")
         .select(
             F.col("ph_a").cast("long"),
             F.col("ph_b").cast("long"),
-            F.bit_count(F.col("ph_a").bitwiseXOR(F.col("ph_b")))
-            .cast("long")
-            .alias("hamming"),
+            hamming("ph_a", "ph_b").cast("long").alias("hamming"),
             F.col("n_a").cast("long"),
             F.col("n_b").cast("long"),
             F.col("rep_a").cast("long"),

@@ -14,7 +14,17 @@ import sys
 sys.path.insert(0, os.path.join(os.path.dirname(os.path.dirname(
     os.path.abspath(__file__))), "tools"))
 
-from plan_fingerprint import normalize_plan, replica_fingerprint  # noqa: E402
+import json  # noqa: E402
+import subprocess  # noqa: E402
+
+from plan_fingerprint import (  # noqa: E402
+    diff_plans,
+    normalize_plan,
+    replica_fingerprint,
+)
+
+_TOOL = os.path.join(os.path.dirname(os.path.dirname(
+    os.path.abspath(__file__))), "tools", "plan_fingerprint.py")
 
 
 def test_normalize_strips_session_tokens():
@@ -75,3 +85,42 @@ def test_normalize_strips_lambda_variable_counters():
         "/d",
     )
     assert a != c
+
+
+def test_plan_diff_gate_on_hand_written_dumps(tmp_path):
+    """--diff lists changed, added and removed queries and fails only
+    on one that --expect does not name; a failed build (null) that
+    turns into a plan is a change."""
+    parent = {"a": "Project [x#]", "b": "Filter (y# > 1)", "c": None,
+              "gone": "Range (0, 1)"}
+    change = {"a": "Project [x#]", "b": "Filter (y# > 2)", "c": "Scan",
+              "new": "Range (0, 2)"}
+    assert diff_plans(parent, change) == {
+        "changed": ["b", "c"], "added": ["new"], "removed": ["gone"],
+    }
+    assert diff_plans(parent, parent) == {
+        "changed": [], "added": [], "removed": [],
+    }
+    pa, ch = tmp_path / "parent.json", tmp_path / "change.json"
+    pa.write_text(json.dumps(parent))
+    ch.write_text(json.dumps(change))
+
+    def gate(*expect):
+        args = ["--expect", *expect] if expect else []
+        return subprocess.run(
+            [sys.executable, _TOOL, "--diff", str(pa), str(ch), *args],
+            capture_output=True, text=True,
+        )
+
+    ok = gate("b", "c", "new", "gone")
+    assert ok.returncode == 0, ok.stdout + ok.stderr
+    assert "changed: b\n" in ok.stdout and "UNEXPECTED" not in ok.stdout
+    bad = gate("b", "new", "gone")
+    assert bad.returncode == 1
+    assert "changed: c  UNEXPECTED" in bad.stdout
+    assert gate().returncode == 1
+    same = subprocess.run(
+        [sys.executable, _TOOL, "--diff", str(pa), str(pa)],
+        capture_output=True, text=True,
+    )
+    assert same.returncode == 0 and "0 changed" in same.stdout

@@ -49,15 +49,21 @@ Usage:
     python3 tools/plan_fingerprint.py [QUERY ...]               # keys
     python3 tools/plan_fingerprint.py --components [QUERY ...]
     python3 tools/plan_fingerprint.py --plans [QUERY ...]       # plans
+    python3 tools/plan_fingerprint.py --diff PARENT.json CHANGE.json \
+        [--expect QUERY ...]                                    # gate
 
 ``--plans`` prints name -> normalized analyzed plan; run it in two
-checkouts and diff the outputs to see which plans a change touched.
+checkouts and save the outputs.  ``--diff`` reads two such dumps,
+prints the changed, added and removed queries, and exits 1 when any
+of them is not named after ``--expect`` (a query whose build failed
+dumps as null, so a new failure shows as a change).
 """
 
 from __future__ import annotations
 
 import hashlib
 import inspect
+import json
 import os
 import re
 import sys
@@ -318,10 +324,46 @@ def query_plans(names=None, fp_sf: str = FP_SF) -> dict[str, str | None]:
     return out
 
 
-if __name__ == "__main__":
-    import json
+def diff_plans(parent: dict, change: dict) -> dict[str, list[str]]:
+    """The queries whose dumped plan differs between two ``--plans``
+    dumps: in both but different, only in ``change``, only in
+    ``parent``."""
+    return {
+        "changed": sorted(
+            q for q in parent.keys() & change.keys() if parent[q] != change[q]
+        ),
+        "added": sorted(change.keys() - parent.keys()),
+        "removed": sorted(parent.keys() - change.keys()),
+    }
 
+
+def _diff_main(args: list[str]) -> int:
+    if len(args) < 2 or args[2:3] not in ([], ["--expect"]):
+        print("usage: --diff PARENT.json CHANGE.json [--expect QUERY ...]",
+              file=sys.stderr)
+        return 2
+    dumps = []
+    for path in args[:2]:
+        with open(path, encoding="utf-8") as f:
+            dumps.append(json.load(f))
+    diff = diff_plans(*dumps)
+    expect = set(args[3:])
+    unexpected = [q for names in diff.values() for q in names if q not in expect]
+    for kind, names in diff.items():
+        for q in names:
+            print(f"{kind}: {q}" + ("" if q in expect else "  UNEXPECTED"))
+    print(
+        f"{len(dumps[1])} queries; "
+        + ", ".join(f"{len(v)} {k}" for k, v in diff.items())
+        + f"; {len(unexpected)} unexpected"
+    )
+    return 1 if unexpected else 0
+
+
+if __name__ == "__main__":
     modes = {"--components": query_components, "--plans": query_plans}
+    if len(sys.argv) > 1 and sys.argv[1] == "--diff":
+        sys.exit(_diff_main(sys.argv[2:]))
     if len(sys.argv) > 1 and sys.argv[1] in modes:
         print(json.dumps(
             modes[sys.argv[1]](sys.argv[2:] or None), indent=1,
