@@ -584,12 +584,12 @@ def event_rate_deviation(spark: SparkSession, sf: str) -> DataFrame:
              lag(event_type) OVER
                (PARTITION BY user_id ORDER BY ts, event_id) AS prev_type
       FROM {EVENTS_US} events),
-    edges AS (
+    edges AS MATERIALIZED (
       SELECT prev_type AS src, event_type AS dst, count(*) AS n
       FROM seq WHERE prev_type IS NOT NULL GROUP BY 1, 2),
     outdeg AS (SELECT src, CAST(sum(n) AS BIGINT) AS outn
                FROM edges GROUP BY src),
-    nodes AS (SELECT DISTINCT src AS node FROM edges
+    nodes AS MATERIALIZED (SELECT DISTINCT src AS node FROM edges
               UNION SELECT DISTINCT dst FROM edges),
     nn AS (SELECT CAST(count(*) AS DOUBLE) AS nnodes FROM nodes),
     w AS (SELECT src, dst,

@@ -174,12 +174,12 @@ def interval_max_concurrency(spark: SparkSession, sf: str) -> DataFrame:
       SELECT DISTINCT o.o_custkey AS c, l.l_partkey AS p
       FROM orders o JOIN lineitem l ON o.o_orderkey = l.l_orderkey),
     deg AS (SELECT p, count(*) AS nc FROM cp GROUP BY p),
-    e AS (
+    e AS MATERIALIZED (
       SELECT DISTINCT a.c AS u, b.c AS v
       FROM cp a
       JOIN cp b ON a.p = b.p AND a.c < b.c
       WHERE a.p IN (SELECT p FROM deg WHERE nc <= {_RARE_PART_MAX_CUSTS})),
-    tri AS (
+    tri AS MATERIALIZED (
       SELECT e1.u AS ta, e1.v AS tb, e2.v AS tc
       FROM e e1
       JOIN e e2 ON e1.v = e2.u
@@ -470,7 +470,7 @@ def _cms_oracle() -> str:
     )
     return f"""
     WITH tok AS ({_TOK_SQL}),
-    wc AS (SELECT word, CAST(count(*) AS BIGINT) AS n
+    wc AS MATERIALIZED (SELECT word, CAST(count(*) AS BIGINT) AS n
            FROM tok WHERE word <> '' GROUP BY word),
     bk AS ({branches}),
     sk AS (SELECT d, bucket, CAST(sum(n) AS BIGINT) AS cnt
@@ -828,13 +828,12 @@ _LPA_EDGES_SQL = f"""
       SELECT DISTINCT o.o_custkey AS c, l.l_partkey AS p
       FROM orders o JOIN lineitem l ON o.o_orderkey = l.l_orderkey),
     deg AS (SELECT p, count(*) AS nc FROM cp GROUP BY p),
-    e0 AS (
+    e0 AS MATERIALIZED (
       SELECT DISTINCT a.c AS u, b.c AS v
       FROM cp a
       JOIN cp b ON a.p = b.p AND a.c < b.c
       WHERE a.p IN (SELECT p FROM deg WHERE nc <= {_RARE_PART_MAX_CUSTS})),
-    ed AS (SELECT u, v FROM e0 UNION ALL SELECT v, u FROM e0),
-    n0 AS (SELECT u AS node, u AS lbl FROM ed GROUP BY u)
+    ed AS MATERIALIZED (SELECT u, v FROM e0 UNION ALL SELECT v, u FROM e0)
 """
 
 
@@ -845,7 +844,7 @@ def _lpa_step_sql(i: int) -> str:
              count(*) AS cnt
       FROM ed JOIN n{i - 1} ON ed.v = n{i - 1}.node
       GROUP BY 1, 2),
-    n{i} AS (
+    n{i} AS MATERIALIZED (
       SELECT node, lbl FROM (
         SELECT node, lbl,
                row_number() OVER (PARTITION BY node
@@ -857,50 +856,18 @@ def _lpa_step_sql(i: int) -> str:
 def _lpa_oracle() -> str:
     steps = ",".join(_lpa_step_sql(i) for i in range(1, _LPA_ITERS + 1))
     return f"""
-    WITH {_LPA_EDGES_SQL}, {steps}
+    WITH {_LPA_EDGES_SQL},
+    n0 AS MATERIALIZED (SELECT u AS node, u AS lbl FROM ed GROUP BY u),
+    {steps}
     SELECT lbl AS community, CAST(count(*) AS BIGINT) AS n_members,
            CAST(min(node) AS BIGINT) AS min_member
     FROM n{_LPA_ITERS} GROUP BY 1
     """
 
 
-def _lpa_oracle_staged() -> list[str]:
-    """Materialized-staging twin (Query.staged_oracle): the edge list
-    and each round's label table become temp TABLES, so round i's two
-    references to round i-1 stop re-inlining the whole chain — the
-    chained form dies of DuckDB CTE re-expansion at the 100x replica
-    (SCALE.md §9j); this one is linear in the iteration count."""
-    stages = [
-        f"CREATE OR REPLACE TEMP TABLE lpa_ed AS WITH {_LPA_EDGES_SQL} "
-        "SELECT u, v FROM ed",
-        "CREATE OR REPLACE TEMP TABLE lpa_n0 AS "
-        "SELECT u AS node, u AS lbl FROM lpa_ed GROUP BY u",
-    ]
-    for i in range(1, _LPA_ITERS + 1):
-        stages.append(
-            f"""CREATE OR REPLACE TEMP TABLE lpa_n{i} AS
-    WITH v AS (
-      SELECT ed.u AS node, p.lbl, count(*) AS cnt
-      FROM lpa_ed ed JOIN lpa_n{i - 1} p ON ed.v = p.node
-      GROUP BY 1, 2)
-    SELECT node, lbl FROM (
-      SELECT node, lbl,
-             row_number() OVER (PARTITION BY node
-                                ORDER BY cnt DESC, lbl) AS rn
-      FROM v) WHERE rn = 1"""
-        )
-    stages.append(
-        f"""SELECT lbl AS community, CAST(count(*) AS BIGINT) AS n_members,
-           CAST(min(node) AS BIGINT) AS min_member
-    FROM lpa_n{_LPA_ITERS} GROUP BY 1"""
-    )
-    return stages
-
-
 @query(
     "label_propagation_communities",
     oracle=_lpa_oracle(),
-    staged_oracle=_lpa_oracle_staged(),
 )
 def label_propagation_communities(spark: SparkSession, sf: str) -> DataFrame:
     """Community detection by synchronous label propagation (Raghavan

@@ -7,9 +7,8 @@ through the µs-pinned EVENTS_US relation, money is BIGINT cents,
 every published ratio is integer-divided, and float-typed embedding
 components enter arithmetic only as floor(x * 1e7) BIGINT ticks (the
 embedding_centroids precedent, proven portable through the 100x
-sweep).  The iterative query ships both the chained-CTE oracle (the
-driver contract) and a materialized-staging twin (Query.staged_oracle)
-for big-replica evidence.
+sweep).  The iterative oracles mark each round's CTE MATERIALIZED so
+DuckDB computes it once (ORACLE_PORTABILITY.md CTE discipline).
 """
 
 from __future__ import annotations
@@ -283,7 +282,7 @@ def _cc_oracle() -> str:
     steps = []
     for i in range(1, _CC_ITERS + 1):
         steps.append(f"""
-    c{i} AS (
+    c{i} AS MATERIALIZED (
       SELECT node, min(lbl) AS lbl FROM (
         SELECT node, lbl FROM c{i - 1}
         UNION ALL
@@ -292,42 +291,17 @@ def _cc_oracle() -> str:
       GROUP BY node)""")
     return f"""
     WITH {_LPA_EDGES_SQL},
-    c0 AS (SELECT u AS node, u AS lbl FROM ed GROUP BY u),{",".join(steps)}
+    c0 AS MATERIALIZED (SELECT u AS node, u AS lbl FROM ed GROUP BY u),
+    {",".join(steps)}
     SELECT lbl AS component, CAST(count(*) AS BIGINT) AS n_members,
            CAST(min(node) AS BIGINT) AS min_member
     FROM c{_CC_ITERS} GROUP BY 1
     """
 
 
-def _cc_oracle_staged() -> list[str]:
-    stages = [
-        f"CREATE OR REPLACE TEMP TABLE cc_ed AS WITH {_LPA_EDGES_SQL} "
-        "SELECT u, v FROM ed",
-        "CREATE OR REPLACE TEMP TABLE cc_c0 AS "
-        "SELECT u AS node, u AS lbl FROM cc_ed GROUP BY u",
-    ]
-    for i in range(1, _CC_ITERS + 1):
-        stages.append(
-            f"""CREATE OR REPLACE TEMP TABLE cc_c{i} AS
-    SELECT node, min(lbl) AS lbl FROM (
-      SELECT node, lbl FROM cc_c{i - 1}
-      UNION ALL
-      SELECT ed.u AS node, c.lbl
-      FROM cc_ed ed JOIN cc_c{i - 1} c ON ed.v = c.node)
-    GROUP BY node"""
-        )
-    stages.append(
-        f"""SELECT lbl AS component, CAST(count(*) AS BIGINT) AS n_members,
-           CAST(min(node) AS BIGINT) AS min_member
-    FROM cc_c{_CC_ITERS} GROUP BY 1"""
-    )
-    return stages
-
-
 @query(
     "connected_components_hashmin",
     oracle=_cc_oracle(),
-    staged_oracle=_cc_oracle_staged(),
 )
 def connected_components_hashmin(spark: SparkSession, sf: str) -> DataFrame:
     """Connected components by K=4 rounds of synchronous hash-min
@@ -341,8 +315,9 @@ def connected_components_hashmin(spark: SparkSession, sf: str) -> DataFrame:
     the component census.  Scale: the corpus-sized work is the one
     edge-list build (persisted); each round is an edge-label join +
     min-combine — both map-side-combinable aggregates on tables
-    orders of magnitude smaller than the corpus.  The chained oracle
-    doubles per step (2^K CTE re-inlining), hence the staged twin."""
+    orders of magnitude smaller than the corpus.  The oracle
+    materializes each round's CTE; inlined, it would double per step
+    (2^K CTE re-inlining)."""
     ed = copurchase_edges(spark, sf)
     lbl = (
         ed.select("u")
@@ -368,59 +343,37 @@ _KCORE_K = 3
 _KCORE_T = 4
 
 
-def _kcore_round_sql(i: int, ed: str, prev: str) -> tuple[str, str]:
-    d = f"""
+def _kcore_degrees_sql(alive: str) -> str:
+    return f"""
       SELECT e.u AS node, count(*) AS dg
-      FROM {ed} e
-      JOIN {prev} x ON e.u = x.node
-      JOIN {prev} y ON e.v = y.node
+      FROM ed e
+      JOIN {alive} x ON e.u = x.node
+      JOIN {alive} y ON e.v = y.node
       GROUP BY e.u"""
-    a = f"SELECT node FROM kd{i} WHERE dg >= {_KCORE_K}"
-    return d, a
 
 
 def _kcore_oracle() -> str:
-    parts = [f"ka0 AS (SELECT u AS node FROM ed GROUP BY u)"]
+    parts = ["ka0 AS MATERIALIZED (SELECT u AS node FROM ed GROUP BY u)"]
     for i in range(1, _KCORE_T + 1):
-        d, a = _kcore_round_sql(i, "ed", f"ka{i - 1}")
-        parts.append(f"kd{i} AS ({d})")
-        parts.append(f"ka{i} AS ({a})")
-    d_fin, _ = _kcore_round_sql(_KCORE_T + 1, "ed", f"ka{_KCORE_T}")
+        parts.append(
+            f"kd{i} AS MATERIALIZED ({_kcore_degrees_sql(f'ka{i - 1}')})"
+        )
+        parts.append(
+            f"ka{i} AS MATERIALIZED "
+            f"(SELECT node FROM kd{i} WHERE dg >= {_KCORE_K})"
+        )
     return f"""
     WITH {_LPA_EDGES_SQL},
     {",".join(parts)},
-    kfin AS ({d_fin})
+    kfin AS ({_kcore_degrees_sql(f'ka{_KCORE_T}')})
     SELECT CAST(node AS BIGINT) AS node, CAST(dg AS BIGINT) AS core_deg
     FROM kfin
     """
 
 
-def _kcore_oracle_staged() -> list[str]:
-    stages = [
-        f"CREATE OR REPLACE TEMP TABLE kc_ed AS WITH {_LPA_EDGES_SQL} "
-        "SELECT u, v FROM ed",
-        "CREATE OR REPLACE TEMP TABLE kc_ka0 AS "
-        "SELECT u AS node FROM kc_ed GROUP BY u",
-    ]
-    for i in range(1, _KCORE_T + 1):
-        d, _ = _kcore_round_sql(i, "kc_ed", f"kc_ka{i - 1}")
-        stages.append(f"CREATE OR REPLACE TEMP TABLE kc_kd{i} AS {d}")
-        stages.append(
-            f"CREATE OR REPLACE TEMP TABLE kc_ka{i} AS "
-            f"SELECT node FROM kc_kd{i} WHERE dg >= {_KCORE_K}"
-        )
-    d_fin, _ = _kcore_round_sql(_KCORE_T + 1, "kc_ed", f"kc_ka{_KCORE_T}")
-    stages.append(
-        f"SELECT CAST(node AS BIGINT) AS node,"
-        f" CAST(dg AS BIGINT) AS core_deg FROM ({d_fin})"
-    )
-    return stages
-
-
 @query(
     "kcore_copurchase",
     oracle=_kcore_oracle(),
-    staged_oracle=_kcore_oracle_staged(),
 )
 def kcore_copurchase(spark: SparkSession, sf: str) -> DataFrame:
     """k-core peeling (k=3, T=4 rounds) of the rare-part co-purchase
@@ -446,9 +399,8 @@ def kcore_copurchase(spark: SparkSession, sf: str) -> DataFrame:
     round).  Death sets are disjoint across rounds, so each removed
     edge is subtracted exactly once; a survivor whose last neighbor
     died ends at degree 0 and emits no row, matching the join
-    formulation the oracle uses.  The chained oracle re-inlines the
-    edge CTE per round, hence the staged twin
-    (ORACLE_PORTABILITY.md CTE discipline)."""
+    formulation the oracle uses.  The oracle materializes the edge
+    CTE and each round (ORACLE_PORTABILITY.md CTE discipline)."""
     ed = copurchase_edges(spark, sf)
     deg = ed.groupBy("u").agg(F.count(F.lit(1)).alias("dg")).persist()
     for _ in range(_KCORE_T):
@@ -484,7 +436,7 @@ def _bfs_oracle() -> str:
     steps = []
     for i in range(1, _BFS_T + 1):
         steps.append(f"""
-    l{i} AS (
+    l{i} AS MATERIALIZED (
       SELECT node, min(h) AS h FROM (
         SELECT node, h FROM l{i - 1}
         UNION ALL
@@ -495,44 +447,16 @@ def _bfs_oracle() -> str:
     WITH {_LPA_EDGES_SQL},
     dg AS (SELECT u, count(*) AS dg FROM ed GROUP BY u),
     hub AS (SELECT u AS node FROM dg ORDER BY dg DESC, u LIMIT 1),
-    l0 AS (SELECT node, 0 AS h FROM hub),{",".join(steps)}
+    l0 AS MATERIALIZED (SELECT node, 0 AS h FROM hub),{",".join(steps)}
     SELECT CAST(h AS BIGINT) AS hops, CAST(count(*) AS BIGINT) AS n_nodes,
            CAST(min(node) AS BIGINT) AS min_node
     FROM l{_BFS_T} GROUP BY 1
     """
 
 
-def _bfs_oracle_staged() -> list[str]:
-    stages = [
-        f"CREATE OR REPLACE TEMP TABLE bfs_ed AS WITH {_LPA_EDGES_SQL} "
-        "SELECT u, v FROM ed",
-        """CREATE OR REPLACE TEMP TABLE bfs_l0 AS
-    SELECT u AS node, 0 AS h FROM (
-      SELECT u, count(*) AS dg FROM bfs_ed GROUP BY u
-      ORDER BY dg DESC, u LIMIT 1)""",
-    ]
-    for i in range(1, _BFS_T + 1):
-        stages.append(
-            f"""CREATE OR REPLACE TEMP TABLE bfs_l{i} AS
-    SELECT node, min(h) AS h FROM (
-      SELECT node, h FROM bfs_l{i - 1}
-      UNION ALL
-      SELECT ed.u AS node, c.h + 1 AS h
-      FROM bfs_ed ed JOIN bfs_l{i - 1} c ON ed.v = c.node)
-    GROUP BY node"""
-        )
-    stages.append(
-        f"""SELECT CAST(h AS BIGINT) AS hops, CAST(count(*) AS BIGINT) AS n_nodes,
-           CAST(min(node) AS BIGINT) AS min_node
-    FROM bfs_l{_BFS_T} GROUP BY 1"""
-    )
-    return stages
-
-
 @query(
     "bfs_hop_census",
     oracle=_bfs_oracle(),
-    staged_oracle=_bfs_oracle_staged(),
 )
 def bfs_hop_census(spark: SparkSession, sf: str) -> DataFrame:
     """Breadth-first search from the highest-degree hub of the
@@ -552,8 +476,8 @@ def bfs_hop_census(spark: SparkSession, sf: str) -> DataFrame:
     reachability).  First discovery at round i IS the min-hop level,
     so the frontier form is value-identical to the oracle's min-
     relaxation form (l_i(node) = min hops over <= i steps); the
-    chained oracle re-inlines the edge CTE 2^T times, hence the
-    staged twin (ORACLE_PORTABILITY.md CTE discipline)."""
+    oracle materializes the edge CTE and each round, which inlined
+    would re-run 2^T times (ORACLE_PORTABILITY.md CTE discipline)."""
     ed = copurchase_edges(spark, sf)
     deg = ed.groupBy("u").agg(F.count(F.lit(1)).alias("dg"))
     hub = (
@@ -786,7 +710,7 @@ def _mk_paths_sql() -> str:
       SELECT 'START' AS src, 'CONV' AS dst
       FROM (SELECT DISTINCT user_id FROM pe WHERE pus IS NOT NULL) cv
       WHERE user_id NOT IN (SELECT DISTINCT user_id FROM tch)),
-    tr AS (
+    tr AS MATERIALIZED (
       SELECT src, dst, count(*) AS n FROM (
         SELECT src, dst FROM sq
         UNION ALL SELECT src, dst FROM term
@@ -795,80 +719,48 @@ def _mk_paths_sql() -> str:
     outd AS (SELECT src, sum(n) AS m FROM tr GROUP BY 1),
     p AS (SELECT tr.src, tr.dst, CAST(n AS DOUBLE) / m AS p
           FROM tr JOIN outd ON outd.src = tr.src),
-    pc AS (SELECT src, p FROM p WHERE dst = 'CONV'),
-    pt AS (SELECT src, dst, p FROM p
+    pc AS MATERIALIZED (SELECT src, p FROM p WHERE dst = 'CONV'),
+    pt AS MATERIALIZED (SELECT src, dst, p FROM p
            WHERE dst IN ('click', 'error', 'signup', 'view')),
     scn AS (SELECT * FROM (VALUES
       ('full', NULL), ('rm_click', 'click'), ('rm_error', 'error'),
       ('rm_signup', 'signup'), ('rm_view', 'view')) s(sc, rm)),
     sts AS (SELECT * FROM (VALUES
       ('click'), ('error'), ('signup'), ('view'), ('START')) t(st)),
-    grid AS (SELECT sc, rm, st FROM scn CROSS JOIN sts)"""
+    grid AS MATERIALIZED (SELECT sc, rm, st FROM scn CROSS JOIN sts)"""
 
 
-def _mk_iter_sql(i: int, grid: str, pc: str, pt: str, prev: str) -> str:
-    return f"""
+def _mk_oracle() -> str:
+    steps = ["x0 AS MATERIALIZED (SELECT sc, rm, st, 0.0 AS x FROM grid)"]
+    for i in range(1, _MK_K + 1):
+        steps.append(f"""x{i} AS MATERIALIZED (
       SELECT b.sc, b.rm, b.st,
              CASE WHEN b.st = b.rm THEN 0.0
                   ELSE coalesce(pc.p, 0.0) + coalesce(agg.s, 0.0)
              END AS x
-      FROM {grid} b
-      LEFT JOIN {pc} pc ON pc.src = b.st
+      FROM grid b
+      LEFT JOIN pc ON pc.src = b.st
       LEFT JOIN (
         SELECT xp.sc, pt.src AS st, sum(pt.p * xp.x) AS s
-        FROM {pt} pt JOIN {prev} xp ON xp.st = pt.dst
-        GROUP BY 1, 2) agg ON agg.sc = b.sc AND agg.st = b.st"""
-
-
-def _mk_final_sql(last: str) -> str:
+        FROM pt JOIN x{i - 1} xp ON xp.st = pt.dst
+        GROUP BY 1, 2) agg ON agg.sc = b.sc AND agg.st = b.st)""")
     return f"""
+    WITH {_mk_paths_sql()},
+    {",".join(steps)}
     SELECT replace(fin.sc, 'rm_', '') AS channel,
            round(pf.x, 6) AS p_full,
            round(fin.x, 6) AS p_removed,
            round(CASE WHEN pf.x > 0 THEN 1.0 - fin.x / pf.x
                       ELSE 0.0 END, 6) AS removal_effect
-    FROM {last} fin
-    JOIN {last} pf ON pf.sc = 'full' AND pf.st = 'START'
-    WHERE fin.st = 'START' AND fin.sc <> 'full'"""
-
-
-def _mk_oracle() -> str:
-    steps = ["x0 AS (SELECT sc, rm, st, 0.0 AS x FROM grid)"]
-    for i in range(1, _MK_K + 1):
-        steps.append(
-            f"x{i} AS ({_mk_iter_sql(i, 'grid', 'pc', 'pt', f'x{i - 1}')})"
-        )
-    return f"""
-    WITH {_mk_paths_sql()},
-    {",".join(steps)}
-    {_mk_final_sql(f'x{_MK_K}')}
+    FROM x{_MK_K} fin
+    JOIN x{_MK_K} pf ON pf.sc = 'full' AND pf.st = 'START'
+    WHERE fin.st = 'START' AND fin.sc <> 'full'
     """
-
-
-def _mk_oracle_staged() -> list[str]:
-    stages = [
-        f"CREATE OR REPLACE TEMP TABLE mk_pc AS WITH {_mk_paths_sql()} "
-        "SELECT src, p FROM pc",
-        f"CREATE OR REPLACE TEMP TABLE mk_pt AS WITH {_mk_paths_sql()} "
-        "SELECT src, dst, p FROM pt",
-        f"CREATE OR REPLACE TEMP TABLE mk_grid AS WITH {_mk_paths_sql()} "
-        "SELECT sc, rm, st FROM grid",
-        "CREATE OR REPLACE TEMP TABLE mk_x0 AS "
-        "SELECT sc, rm, st, 0.0 AS x FROM mk_grid",
-    ]
-    for i in range(1, _MK_K + 1):
-        stages.append(
-            f"CREATE OR REPLACE TEMP TABLE mk_x{i} AS "
-            + _mk_iter_sql(i, "mk_grid", "mk_pc", "mk_pt", f"mk_x{i - 1}")
-        )
-    stages.append(_mk_final_sql(f"mk_x{_MK_K}"))
-    return stages
 
 
 @query(
     "markov_attribution_removal",
     oracle=_mk_oracle(),
-    staged_oracle=_mk_oracle_staged(),
 )
 def markov_attribution_removal(spark: SparkSession, sf: str) -> DataFrame:
     """First-order Markov (removal-effect) channel attribution — the
@@ -895,8 +787,9 @@ def markov_attribution_removal(spark: SparkSession, sf: str) -> DataFrame:
     k^2-bounded matrix (kmeans-centroid discipline — the Spark-side
     loop formulation paid ~10 s of Catalyst re-analysis on an 8-deep
     lineage over a 25-row table, at ANY corpus size).  The
-    chained oracle re-inlines the corpus CTE once per iteration, hence
-    the staged twin (ORACLE_PORTABILITY.md CTE discipline)."""
+    oracle materializes the transition tables and each iteration, so
+    no iteration re-runs the corpus CTEs (ORACLE_PORTABILITY.md CTE
+    discipline)."""
     ev = t(spark, sf, "events").select(
         "user_id",
         "event_type",

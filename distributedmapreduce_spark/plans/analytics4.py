@@ -920,13 +920,13 @@ def _linkpred_oracle() -> str:
 
     return f"""
     WITH {_LPA_EDGES_SQL},
-    nd AS (SELECT u AS node, CAST(count(*) AS BIGINT) AS d FROM ed
-           GROUP BY u),
+    nd AS MATERIALIZED (
+      SELECT u AS node, CAST(count(*) AS BIGINT) AS d FROM ed GROUP BY u),
     p2 AS (
       SELECT a.u AS x, b.v AS z, CAST(count(*) AS BIGINT) AS cn
       FROM ed a JOIN ed b ON a.v = b.u AND a.u < b.v
       GROUP BY 1, 2),
-    ne AS (
+    ne AS MATERIALIZED (
       SELECT p2.x, p2.z, p2.cn FROM p2
       WHERE NOT EXISTS (SELECT 1 FROM e0
                         WHERE e0.u = p2.x AND e0.v = p2.z)),
@@ -941,42 +941,9 @@ def _linkpred_oracle() -> str:
     """
 
 
-def _linkpred_oracle_staged() -> list[str]:
-    # the chained form re-inlines the edge CTE (a lineitem-orders
-    # self-join) once per reference; at the 100x replica DuckDB dies
-    # of spill building it twice for the two-hop join — the staged
-    # twin materializes each stage ONCE (the LPA/CC/BFS discipline)
-    from .analytics2 import _LPA_EDGES_SQL
-
-    return [
-        f"CREATE OR REPLACE TEMP TABLE lp_ed AS WITH {_LPA_EDGES_SQL} "
-        "SELECT u, v FROM ed",
-        "CREATE OR REPLACE TEMP TABLE lp_e0 AS "
-        "SELECT u, v FROM lp_ed WHERE u < v",
-        "CREATE OR REPLACE TEMP TABLE lp_nd AS "
-        "SELECT u AS node, CAST(count(*) AS BIGINT) AS d FROM lp_ed "
-        "GROUP BY u",
-        """CREATE OR REPLACE TEMP TABLE lp_ne AS
-    SELECT p2.x, p2.z, p2.cn FROM (
-      SELECT a.u AS x, b.v AS z, CAST(count(*) AS BIGINT) AS cn
-      FROM lp_ed a JOIN lp_ed b ON a.v = b.u AND a.u < b.v
-      GROUP BY 1, 2) p2
-    WHERE NOT EXISTS (SELECT 1 FROM lp_e0
-                      WHERE lp_e0.u = p2.x AND lp_e0.v = p2.z)""",
-        f"""SELECT ne.x AS u, ne.z AS v, ne.cn AS common_neighbors,
-           CAST((ne.cn * 1000000) // (dx.d + dz.d - ne.cn) AS BIGINT)
-             AS jaccard_e6
-    FROM lp_ne ne JOIN lp_nd dx ON ne.x = dx.node
-                  JOIN lp_nd dz ON ne.z = dz.node
-    ORDER BY jaccard_e6 DESC, common_neighbors DESC, u, v
-    LIMIT {_LP_TOPK}""",
-    ]
-
-
 @query(
     "graph_jaccard_link_prediction",
     oracle=_linkpred_oracle(),
-    staged_oracle=_linkpred_oracle_staged(),
 )
 def graph_jaccard_link_prediction(spark: SparkSession, sf: str) -> DataFrame:
     """Link prediction on the co-purchase graph by common-neighbor

@@ -431,7 +431,7 @@ _NB_CORE_SQL = f"""toks AS (
       FROM documents),
     docw AS (
       SELECT doc_id, lang, unnest(ws) AS w FROM toks),
-    dw AS (
+    dw AS MATERIALIZED (
       SELECT doc_id, lang, w, CAST(count(*) AS BIGINT) AS nwd
       FROM docw GROUP BY 1, 2, 3),
     model AS (
@@ -478,26 +478,6 @@ _NB_CORE_SQL = f"""toks AS (
              lead(score_r) OVER (PARTITION BY doc_id
                ORDER BY score_r DESC, lang ASC) AS second
       FROM sc)"""
-
-# staged twins (CTE-re-inline discipline): the corpus-sized dw CTE is
-# referenced by model/prior/dstat/s1 — four re-materializations per
-# run in the chained oracle (~16 min at the 100x replica); staging dw
-# once makes everything downstream vocab/panel-cheap.
-_NB_HEAD_SQL = _NB_CORE_SQL.split("    model AS (")[0].rstrip().rstrip(",")
-_NB_TAIL_SQL = "    model AS (" + _NB_CORE_SQL.split("    model AS (", 1)[1]
-
-
-def _nb_staged(final_select: str) -> list[str]:
-    return [
-        "CREATE OR REPLACE TEMP TABLE nb_dw AS WITH "
-        + _NB_HEAD_SQL
-        + " SELECT * FROM dw",
-        "WITH dw AS (SELECT * FROM nb_dw),\n"
-        + _NB_TAIL_SQL
-        + final_select,
-    ]
-
-
 
 def _nb_rk(spark: SparkSession, sf: str) -> DataFrame:
     """Shared NB core (Spark twin of _NB_CORE_SQL): per-(doc, lang)
@@ -595,7 +575,6 @@ _NB_PRED_SELECT = f"""
     WITH {_NB_CORE_SQL}
     {_NB_PRED_SELECT}
     """,
-    staged_oracle=_nb_staged(_NB_PRED_SELECT),
 )
 def naive_bayes_lang_predict(spark: SparkSession, sf: str) -> DataFrame:
     """Multinomial naive-Bayes language identification, trained and
@@ -978,7 +957,7 @@ def _ccf_oracle() -> str:
       SELECT day, dx, dy,
              {", ".join(num(k) for k in lags)}
       FROM d),
-    s AS (
+    s AS MATERIALIZED (
       SELECT sum(dx * dx) AS denx, sum(dy * dy) AS deny,
              {", ".join(
                  f"sum(dx * y{k + _CCF_MAX_LAG}) AS num{k + _CCF_MAX_LAG},"
@@ -1659,67 +1638,39 @@ def assoc_rules_lift(spark: SparkSession, sf: str) -> DataFrame:
 _QN_BKT_C = 1_000_000  # $10k value bands for distributed ranking
 _QN_CELL = 4096  # rank-space cells for the interval lookup join
 
-_QN_SPEND_SQL = """
+def _qn_oracle() -> str:
+    return """
+    WITH spend AS MATERIALIZED (
       SELECT o_custkey AS ck, c_mktsegment AS seg,
              CAST(sum(CAST(round(o_totalprice * 100) AS BIGINT))
                   AS BIGINT) AS v
       FROM orders JOIN customer ON c_custkey = o_custkey
-      GROUP BY 1, 2"""
-
-_QN_FINAL_SQL = """
-    SELECT tt.ck AS c_custkey, tt.seg AS segment, tt.v AS spend_c,
-           tt.r AS rank_in_seg, tt.ng AS n_in_seg,
-           tt.t AS pooled_rank, p.v AS normalized_c
-    FROM {tt} tt JOIN {p} p ON p.pr = tt.t"""
-
-
-def _qn_oracle() -> str:
-    return f"""
-    WITH spend AS ({_QN_SPEND_SQL}),
-    r AS (
+      GROUP BY 1, 2),
+    r AS MATERIALIZED (
       SELECT ck, seg, v,
              CAST(row_number() OVER (PARTITION BY seg
                ORDER BY v, ck) AS BIGINT) AS r,
              CAST(count(*) OVER (PARTITION BY seg) AS BIGINT) AS ng,
              CAST(count(*) OVER () AS BIGINT) AS nn
       FROM spend),
-    p AS (
+    p AS MATERIALIZED (
       SELECT v, CAST(row_number() OVER (ORDER BY v, ck) AS BIGINT)
                AS pr
       FROM spend),
-    tt AS (
+    tt AS MATERIALIZED (
       SELECT ck, seg, v, r, ng,
              (r * nn + ng - 1) // ng AS t
       FROM r)
-    {_QN_FINAL_SQL.format(tt="tt", p="p")}
+    SELECT tt.ck AS c_custkey, tt.seg AS segment, tt.v AS spend_c,
+           tt.r AS rank_in_seg, tt.ng AS n_in_seg,
+           tt.t AS pooled_rank, p.v AS normalized_c
+    FROM tt JOIN p ON p.pr = tt.t
     """
-
-
-def _qn_oracle_staged() -> list[str]:
-    return [
-        f"CREATE OR REPLACE TEMP TABLE qn_spend AS {_QN_SPEND_SQL}",
-        """CREATE OR REPLACE TEMP TABLE qn_r AS
-      SELECT ck, seg, v,
-             CAST(row_number() OVER (PARTITION BY seg
-               ORDER BY v, ck) AS BIGINT) AS r,
-             CAST(count(*) OVER (PARTITION BY seg) AS BIGINT) AS ng,
-             CAST(count(*) OVER () AS BIGINT) AS nn
-      FROM qn_spend""",
-        """CREATE OR REPLACE TEMP TABLE qn_p AS
-      SELECT v, CAST(row_number() OVER (ORDER BY v, ck) AS BIGINT)
-               AS pr
-      FROM qn_spend""",
-        """CREATE OR REPLACE TEMP TABLE qn_tt AS
-      SELECT ck, seg, v, r, ng, (r * nn + ng - 1) // ng AS t
-      FROM qn_r""",
-        _QN_FINAL_SQL.format(tt="qn_tt", p="qn_p"),
-    ]
 
 
 @query(
     "quantile_normalize_spend",
     oracle=_qn_oracle(),
-    staged_oracle=_qn_oracle_staged(),
 )
 def quantile_normalize_spend(spark: SparkSession, sf: str) -> DataFrame:
     """Exact quantile normalization of per-customer spend ACROSS
@@ -1743,8 +1694,8 @@ def quantile_normalize_spend(spark: SparkSession, sf: str) -> DataFrame:
     intervals explode to the cells they span (Σ spans ≈ N/4096 +
     #values), targets key to ONE cell, and the equi-join + contain
     filter yields exactly one row per customer — never an all-pairs
-    band product.  The chained oracle references the spend CTE
-    twice, hence the registered staged twin (CTE discipline)."""
+    band product.  The oracle materializes the spend CTE, which it
+    references twice (ORACLE_PORTABILITY.md CTE discipline)."""
     spend = (
         t(spark, sf, "orders")
         .select(
@@ -2333,22 +2284,28 @@ def rbo_brand_rankings(spark: SparkSession, sf: str) -> DataFrame:
 _DA_RARE_MAX = 15  # the triangle_count_copurchase edge-build bound
 
 
-_DA_CP_SQL = """
+def _da_oracle() -> str:
+    return f"""
+    WITH cp AS MATERIALIZED (
       SELECT DISTINCT o.o_custkey AS c, l.l_partkey AS p
-      FROM orders o JOIN lineitem l ON o.o_orderkey = l.l_orderkey"""
-
-_DA_TAIL_SQL = """
+      FROM orders o JOIN lineitem l ON o.o_orderkey = l.l_orderkey),
+    deg0 AS (SELECT p, count(*) AS nc FROM cp GROUP BY p),
+    e AS MATERIALIZED (
+      SELECT DISTINCT a.c AS u, b.c AS v
+      FROM cp a
+      JOIN cp b ON a.p = b.p AND a.c < b.c
+      WHERE a.p IN (SELECT p FROM deg0 WHERE nc <= {_DA_RARE_MAX})),
     deg AS (
       SELECT node, CAST(count(*) AS BIGINT) AS d FROM (
-        SELECT u AS node FROM {e} UNION ALL SELECT v FROM {e})
+        SELECT u AS node FROM e UNION ALL SELECT v FROM e)
       GROUP BY 1),
     pts AS (
       SELECT du.d AS x, dv.d AS y
-      FROM {e} e JOIN deg du ON du.node = e.u
+      FROM e e JOIN deg du ON du.node = e.u
              JOIN deg dv ON dv.node = e.v
       UNION ALL
       SELECT dv.d, du.d
-      FROM {e} e JOIN deg du ON du.node = e.u
+      FROM e e JOIN deg du ON du.node = e.u
              JOIN deg dv ON dv.node = e.v),
     s AS (
       SELECT CAST(count(*) AS BIGINT) AS m,
@@ -2363,40 +2320,13 @@ _DA_TAIL_SQL = """
                  / sqrt(CAST(m * sxx - sx * sx AS DOUBLE)
                         * CAST(m * syy - sy * sy AS DOUBLE))
                  * 1e6 + 0.5) / 1e6 AS assortativity
-    FROM s WHERE m * sxx - sx * sx > 0 AND m * syy - sy * sy > 0"""
-
-
-def _da_oracle() -> str:
-    return f"""
-    WITH cp AS ({_DA_CP_SQL}),
-    deg0 AS (SELECT p, count(*) AS nc FROM cp GROUP BY p),
-    e AS (
-      SELECT DISTINCT a.c AS u, b.c AS v
-      FROM cp a
-      JOIN cp b ON a.p = b.p AND a.c < b.c
-      WHERE a.p IN (SELECT p FROM deg0 WHERE nc <= {_DA_RARE_MAX})),
-    {_DA_TAIL_SQL.format(e="e")}
+    FROM s WHERE m * sxx - sx * sx > 0 AND m * syy - sy * sy > 0
     """
-
-
-def _da_oracle_staged() -> list[str]:
-    return [
-        f"CREATE OR REPLACE TEMP TABLE da_cp AS {_DA_CP_SQL}",
-        f"""CREATE OR REPLACE TEMP TABLE da_e AS
-      SELECT DISTINCT a.c AS u, b.c AS v
-      FROM da_cp a
-      JOIN da_cp b ON a.p = b.p AND a.c < b.c
-      WHERE a.p IN (SELECT p FROM (SELECT p, count(*) AS nc
-                    FROM da_cp GROUP BY p) d0
-                    WHERE nc <= {_DA_RARE_MAX})""",
-        "WITH " + _DA_TAIL_SQL.format(e="da_e").lstrip(),
-    ]
 
 
 @query(
     "degree_assortativity_copurchase",
     oracle=_da_oracle(),
-    staged_oracle=_da_oracle_staged(),
 )
 def degree_assortativity_copurchase(
     spark: SparkSession, sf: str
@@ -2826,7 +2756,7 @@ def _bd_oracle() -> str:
              unnest(list_filter(string_split(lower(text), ' '),
                                 x -> x <> '')) AS w
       FROM documents),
-    wc AS (
+    wc AS MATERIALIZED (
       SELECT source, w, CAST(count(*) AS BIGINT) AS n
       FROM toks GROUP BY 1, 2),
     stot AS (
@@ -2838,7 +2768,7 @@ def _bd_oracle() -> str:
       SELECT w FROM gw ORDER BY gn DESC, w ASC LIMIT {_BD_TOP}),
     grid AS (
       SELECT top.w, stot.source, stot.tot FROM top CROSS JOIN stot),
-    fr AS (
+    fr AS MATERIALIZED (
       SELECT grid.w, grid.source,
              coalesce(wc.n, 0) * 1000.0 / grid.tot AS f
       FROM grid LEFT JOIN wc
@@ -3445,11 +3375,11 @@ def _ksp_oracle2() -> str:
       SELECT v,
              {cases}
       FROM f GROUP BY 1),
-    cc AS (
+    cc AS MATERIALIZED (
       SELECT v,
              {cums}
       FROM h),
-    tot AS (SELECT {tots} FROM h)
+    tot AS MATERIALIZED (SELECT {tots} FROM h)
     {union}
     """
 
@@ -3646,7 +3576,7 @@ def user_interarrival_cv(spark: SparkSession, sf: str) -> DataFrame:
 _NB_EVAL_SELECT = """
     , pred AS (
       SELECT true_lang, lang AS pred_lang FROM rk WHERE rn = 1),
-    cm AS (
+    cm AS MATERIALIZED (
       SELECT true_lang, pred_lang, CAST(count(*) AS BIGINT) AS n
       FROM pred GROUP BY 1, 2),
     langs AS (
@@ -3684,7 +3614,6 @@ _NB_EVAL_SELECT = """
 @query(
     "naive_bayes_lang_eval",
     oracle="WITH " + _NB_CORE_SQL + "\n" + _NB_EVAL_SELECT,
-    staged_oracle=_nb_staged(_NB_EVAL_SELECT),
 )
 def naive_bayes_lang_eval(spark: SparkSession, sf: str) -> DataFrame:
     """Per-language precision / recall / F1 of the naive-Bayes

@@ -326,12 +326,15 @@ def t_closeness_audit(spark: SparkSession, sf: str) -> DataFrame:
     )
 
 
-_LCC_TAIL_SQL = """
+@query(
+    "local_clustering_coeff",
+    oracle=f"""
+    WITH {_LPA_EDGES_SQL},
     tri AS (
       SELECT e1.u AS ta, e1.v AS tb, e2.v AS tc
-      FROM {e0} e1
-      JOIN {e0} e2 ON e1.v = e2.u
-      JOIN {e0} e3 ON e3.u = e1.u AND e3.v = e2.v),
+      FROM e0 e1
+      JOIN e0 e2 ON e1.v = e2.u
+      JOIN e0 e3 ON e3.u = e1.u AND e3.v = e2.v),
     pt AS (
       SELECT node, CAST(count(*) AS BIGINT) AS n_triangles FROM (
         SELECT ta AS node FROM tri
@@ -339,38 +342,14 @@ _LCC_TAIL_SQL = """
         UNION ALL SELECT tc FROM tri)
       GROUP BY 1),
     dg AS (SELECT u AS node, CAST(count(*) AS BIGINT) AS degree
-           FROM {ed} GROUP BY 1)
+           FROM ed GROUP BY 1)
     SELECT dg.node AS cust, dg.degree,
            CAST(coalesce(pt.n_triangles, 0) AS BIGINT) AS n_triangles,
            CAST(2 * coalesce(pt.n_triangles, 0) * 1000000
                 // (dg.degree * (dg.degree - 1)) AS BIGINT) AS lcc_e6
     FROM dg LEFT JOIN pt ON pt.node = dg.node
     WHERE dg.degree >= 2
-    """
-
-
-def _lcc_oracle_staged() -> list[str]:
-    """Materialize the blocked projection once: the chained form
-    re-inlines cp/e0 (a DISTINCT over the orders⋈lineitem join) per
-    reference — five recomputations that spilled DuckDB out of disk
-    at the 100× replica (the staged mode exists for exactly this,
-    SCALE.md §9j)."""
-    return [
-        f"CREATE OR REPLACE TEMP TABLE lcc_e0 AS WITH {_LPA_EDGES_SQL} "
-        "SELECT u, v FROM e0",
-        "CREATE OR REPLACE TEMP TABLE lcc_ed AS "
-        "SELECT u, v FROM lcc_e0 UNION ALL SELECT v, u FROM lcc_e0",
-        "WITH "
-        + _LCC_TAIL_SQL.format(e0="lcc_e0", ed="lcc_ed").lstrip(),
-    ]
-
-
-@query(
-    "local_clustering_coeff",
-    oracle=f"""
-    WITH {_LPA_EDGES_SQL},
-    {_LCC_TAIL_SQL.format(e0="e0", ed="ed").lstrip()}""",
-    staged_oracle=_lcc_oracle_staged(),
+    """,
 )
 def local_clustering_coeff(spark: SparkSession, sf: str) -> DataFrame:
     """Per-node local clustering coefficient on the rare-part
@@ -774,33 +753,20 @@ def permutation_test_spend(spark: SparkSession, sf: str) -> DataFrame:
 # eigenvector/HITS centrality (power iteration without the float
 # normalization; ranking by walks3 converges to the eigenvector
 # ranking as steps grow).
-_WC_TAIL = """
-    w1 AS (SELECT u AS node, CAST(count(*) AS BIGINT) AS w
-           FROM {ed} GROUP BY 1),
-    w2 AS (SELECT e.u AS node, CAST(sum(w1.w) AS BIGINT) AS w
-           FROM {ed} e JOIN w1 ON w1.node = e.v GROUP BY 1),
-    w3 AS (SELECT e.u AS node, CAST(sum(w2.w) AS BIGINT) AS w
-           FROM {ed} e JOIN w2 ON w2.node = e.v GROUP BY 1)
-    SELECT w1.node AS cust, w1.w AS degree,
-           w2.w AS walks2, w3.w AS walks3
-    FROM w1 JOIN w2 USING (node) JOIN w3 USING (node)
-    """
-
-
-def _wc_oracle_staged() -> list[str]:
-    return [
-        f"CREATE OR REPLACE TEMP TABLE wc_ed AS WITH {_LPA_EDGES_SQL} "
-        "SELECT u, v FROM ed",
-        "WITH " + _WC_TAIL.format(ed="wc_ed").lstrip(),
-    ]
-
-
 @query(
     "walk_count_centrality",
     oracle=f"""
     WITH {_LPA_EDGES_SQL},
-    {_WC_TAIL.format(ed="ed").lstrip()}""",
-    staged_oracle=_wc_oracle_staged(),
+    w1 AS (SELECT u AS node, CAST(count(*) AS BIGINT) AS w
+           FROM ed GROUP BY 1),
+    w2 AS (SELECT e.u AS node, CAST(sum(w1.w) AS BIGINT) AS w
+           FROM ed e JOIN w1 ON w1.node = e.v GROUP BY 1),
+    w3 AS (SELECT e.u AS node, CAST(sum(w2.w) AS BIGINT) AS w
+           FROM ed e JOIN w2 ON w2.node = e.v GROUP BY 1)
+    SELECT w1.node AS cust, w1.w AS degree,
+           w2.w AS walks2, w3.w AS walks3
+    FROM w1 JOIN w2 USING (node) JOIN w3 USING (node)
+    """,
 )
 def walk_count_centrality(spark: SparkSession, sf: str) -> DataFrame:
     """Exact walk-count centrality on the rare-part co-purchase
@@ -814,10 +780,10 @@ def walk_count_centrality(spark: SparkSession, sf: str) -> DataFrame:
 
     Scale: each step is ONE join of the persisted edge list against a
     node-cardinality vector — never the corpus; 3 fixed steps.  The
-    staged oracle twin materializes the blocked projection once (the
-    chained form re-inlines the DISTINCT projection per step — the
-    lcc/§9j lesson).  Int64: walks3 <= deg_max³ ≈ 3.4e9 at the 100×
-    replica — 2.7e9× of headroom."""
+    oracle materializes the blocked projection once (inlined, the
+    DISTINCT projection re-runs per step — the lcc/§9j lesson).
+    Int64: walks3 <= deg_max³ ≈ 3.4e9 at the 100× replica — 2.7e9× of
+    headroom."""
     ed = copurchase_edges(spark, sf)
     w1 = ed.groupBy(F.col("u").alias("node")).agg(
         F.count(F.lit(1)).cast("long").alias("w")
@@ -1365,73 +1331,14 @@ def croston_demand_forecast(spark: SparkSession, sf: str) -> DataFrame:
 # multiple-testing correction every metrics platform needs once it
 # runs one test per segment.  Permutations are md5-u32 deterministic
 # (the permutation_test_spend machinery, randomization unit = order),
-# so the whole p-value VECTOR is oracle-checkable.
+# so the whole p-value VECTOR is oracle-checkable.  The oracle
+# materializes the statistic table and the p-values: inlined, the
+# x(P+1) permutation fan-out re-ran once per reference (24 GB RSS /
+# 30+ min at the 10x replica).  The order aggregate that feeds the
+# fan-out stays inline: a materialized CTE is read back by a pipeline
+# that ran the ×33 md5 fan-out 2-3x slower at sf0.1.
 _BH_P = 32  # permutations per brand
 _BH_ALPHA_E1 = 1  # alpha = 0.1
-
-
-def _bh_stage_sqls() -> list[str]:
-    """Materialized twin of the BH oracle: the chained form
-    re-inlines the order aggregate and its x(P+1) permutation fan-out
-    once per downstream reference (observed at 24 GB RSS / 30+ min at
-    the 10x replica before this twin existed) — each stage computes
-    exactly once (the SCALE.md §9j discipline)."""
-    ok = """
-      SELECT p.p_brand AS brand, l.l_orderkey AS okey,
-             CAST(sum(CAST(round(l.l_extendedprice * 100) AS BIGINT))
-                  AS BIGINT) AS y
-      FROM lineitem l JOIN part p ON l.l_partkey = p.p_partkey
-      GROUP BY 1, 2"""
-    st = f"""
-      SELECT brand, perm,
-             abs(CASE WHEN sum(CASE WHEN g = 1 THEN 1 ELSE 0 END) = 0
-                        OR sum(CASE WHEN g = 0 THEN 1 ELSE 0 END) = 0
-                      THEN 0
-                      ELSE (sum(CASE WHEN g = 1 THEN y ELSE 0 END)
-                            * 10000)
-                           // sum(CASE WHEN g = 1 THEN 1 ELSE 0 END)
-                         - (sum(CASE WHEN g = 0 THEN y ELSE 0 END)
-                            * 10000)
-                           // sum(CASE WHEN g = 0 THEN 1 ELSE 0 END)
-                 END) AS stat_e4
-      FROM (
-        SELECT brand, y, r.range AS perm,
-               CASE WHEN r.range = 0 THEN okey % 2
-                    ELSE {_md5_u32_sql("bh", f"(okey * {_BH_P + 1} + r.range)")}
-                         % 2 END AS g
-        FROM bh_ok CROSS JOIN range(0, {_BH_P + 1}) r)
-      GROUP BY 1, 2"""
-    pv = f"""
-      SELECT s.brand,
-             CAST((1 + sum(CASE WHEN s.perm > 0
-                                 AND s.stat_e4 >= o.stat_e4
-                           THEN 1 ELSE 0 END)) * 1000000
-                  // {_BH_P + 1} AS BIGINT) AS p_e6
-      FROM bh_st s
-      JOIN (SELECT brand, stat_e4 FROM bh_st WHERE perm = 0) o
-        ON o.brand = s.brand
-      GROUP BY 1"""
-    final = f"""
-    WITH rk AS (
-      SELECT brand, p_e6,
-             row_number() OVER (ORDER BY p_e6, brand) AS i,
-             count(*) OVER () AS m
-      FROM bh_pv),
-    thr AS (
-      SELECT CAST(coalesce(max(CASE WHEN p_e6 * m * 10
-                                      <= i * 1000000 * {_BH_ALPHA_E1}
-                                THEN i END), 0) AS BIGINT) AS kmax
-      FROM rk)
-    SELECT rk.brand, rk.p_e6, CAST(rk.i AS BIGINT) AS p_rank,
-           CAST(CASE WHEN rk.i <= thr.kmax THEN 1 ELSE 0 END AS BIGINT)
-             AS rejected
-    FROM rk CROSS JOIN thr"""
-    return [
-        f"CREATE OR REPLACE TEMP TABLE bh_ok AS {ok}",
-        f"CREATE OR REPLACE TEMP TABLE bh_st AS {st}",
-        f"CREATE OR REPLACE TEMP TABLE bh_pv AS {pv}",
-        final,
-    ]
 
 
 @query(
@@ -1449,7 +1356,7 @@ def _bh_stage_sqls() -> list[str]:
                   ELSE {_md5_u32_sql("bh", f"(ok.okey * {_BH_P + 1} + r.range)")}
                        % 2 END AS g
       FROM ok CROSS JOIN range(0, {_BH_P + 1}) r),
-    st AS (
+    st AS MATERIALIZED (
       SELECT brand, perm,
              abs(CASE WHEN sum(CASE WHEN g = 1 THEN 1 ELSE 0 END) = 0
                         OR sum(CASE WHEN g = 0 THEN 1 ELSE 0 END) = 0
@@ -1462,7 +1369,7 @@ def _bh_stage_sqls() -> list[str]:
                            // sum(CASE WHEN g = 0 THEN 1 ELSE 0 END)
                  END) AS stat_e4
       FROM lab GROUP BY 1, 2),
-    pv AS (
+    pv AS MATERIALIZED (
       SELECT s.brand,
              CAST((1 + sum(CASE WHEN s.perm > 0
                                  AND s.stat_e4 >= o.stat_e4
@@ -1486,7 +1393,6 @@ def _bh_stage_sqls() -> list[str]:
              AS rejected
     FROM rk CROSS JOIN thr
     """,
-    staged_oracle=_bh_stage_sqls(),
 )
 def bh_fdr_brand_tests(spark: SparkSession, sf: str) -> DataFrame:
     """Benjamini-Hochberg FDR control across 25 per-brand permutation

@@ -22,21 +22,18 @@ QueryFn = Callable[[SparkSession, str], DataFrame]
 
 @dataclass
 class Query:
+    """A registered query: ``fn`` builds the Spark DataFrame and
+    ``oracle`` is its DuckDB twin, one SQL statement (None -> rows-only
+    check).  An oracle whose CTE is referenced more than once — an
+    iterative chain whose round k reads round k-1 twice, a corpus
+    aggregate read by several consumers — marks that CTE
+    ``AS MATERIALIZED``: DuckDB otherwise re-inlines a CTE at every
+    reference, and a K-round chain expands into 2^K subtrees
+    (ORACLE_PORTABILITY.md "CTE expansion discipline";
+    tests/test_oracle_portability.py guards it)."""
+
     fn: QueryFn
-    oracle: str | None  # DuckDB SQL, or None -> rows-only check
-    # Materialized-staging twin of an ITERATIVE oracle (VERDICT r05
-    # next-round #6): DuckDB 1.0 re-inlines a chained CTE once per
-    # reference, so a K-iteration oracle whose step k reads step k-1
-    # twice expands 2^K subtrees and dies in spill at the 100x
-    # replica even though the Spark side is fine.  staged_oracle is
-    # the same computation as an explicit list of statements — all but
-    # the last are `CREATE OR REPLACE TEMP TABLE` stage
-    # materializations (each stage computed ONCE), the last is the
-    # SELECT compared against Spark.  tools/check_oracle.py uses it
-    # under SPARK_GRAFT_STAGED=1 to extend hash evidence to scales
-    # where the chained form is the bottleneck; the driver contract
-    # (oracle_sql) still ships the single-statement chained form.
-    staged_oracle: list[str] | None = None
+    oracle: str | None
 
 
 _REGISTRY: dict[str, Query] = {}
@@ -57,16 +54,14 @@ EVENTS_US = "(SELECT * REPLACE (CAST(ts AS TIMESTAMP) AS ts) FROM events)"
 
 
 def query(
-    name: str,
-    oracle: str | None = None,
-    staged_oracle: list[str] | None = None,
+    name: str, oracle: str | None = None
 ) -> Callable[[QueryFn], QueryFn]:
     """Register a named query (and optional DuckDB oracle twin)."""
 
     def deco(fn: QueryFn) -> QueryFn:
         if name in _REGISTRY:
             raise ValueError(f"duplicate query name {name!r}")
-        _REGISTRY[name] = Query(fn, oracle, staged_oracle)
+        _REGISTRY[name] = Query(fn, oracle)
         return fn
 
     return deco

@@ -984,7 +984,7 @@ def _p3_oracle() -> str:
              CAST(len(ws) AS BIGINT) AS n_tokens,
              CAST(len(list_distinct(ws)) AS BIGINT) AS n_distinct
       FROM base),
-    k2 AS (
+    k2 AS MATERIALIZED (
       SELECT doc_id, ws, n_tokens, n_distinct FROM (
         SELECT doc_id, ws, n_tokens, n_distinct,
                min(doc_id) OVER (PARTITION BY fp) AS keeper
@@ -996,7 +996,7 @@ def _p3_oracle() -> str:
       SELECT doc_id, count(*) AS n,
              {cnt_cols}
       FROM words GROUP BY doc_id),
-    sig AS (
+    sig AS MATERIALIZED (
       SELECT doc_id, CAST({sig_terms} AS BIGINT) AS sig FROM agg),
     blocks AS (
       SELECT doc_id, 0 AS blk, sig % 256 AS val FROM sig
@@ -1015,7 +1015,7 @@ def _p3_oracle() -> str:
       JOIN sig x ON x.doc_id = doc_a
       JOIN sig y ON y.doc_id = doc_b
       WHERE bit_count(xor(x.sig, y.sig)) <= {_PSH_HAM}),
-    k3 AS (
+    k3 AS MATERIALIZED (
       SELECT k2.* FROM k2
       WHERE NOT EXISTS (SELECT 1 FROM drops d WHERE d.doc_id = k2.doc_id)),
     k4 AS (
@@ -1030,7 +1030,7 @@ def _p3_oracle() -> str:
                              ROWS UNBOUNDED PRECEDING) AS BIGINT) AS cum
         FROM k4)
       WHERE cum <= {_P3_BUDGET}),
-    survival AS (
+    survival AS MATERIALIZED (
       SELECT f.doc_id, f.n_tokens,
              CASE
                WHEN f.n_tokens = 0 THEN 0
@@ -1181,22 +1181,17 @@ _P4_STAGES = (
 
 
 def _p4_stages() -> list[tuple[str, str]]:
-    """The v4 oracle as an ordered list of (name, SELECT body) stages.
+    """The v4 oracle as an ordered list of (name, SELECT body) stages;
+    _p4_oracle renders each as one MATERIALIZED CTE, so DuckDB
+    computes every stage once.
 
-    Two composition rules keep BOTH rendered forms tractable:
-
-    * each stage references every earlier stage AT MOST ONCE at the
-      top level (modality signature stages read ``documents``
-      directly — a per-asset signature is static, so joining the
-      GLOBAL signature table onto the survivor set yields the same
-      keeper minima as signaturing only survivors), and the audit
-      tail aggregates ``survival`` exactly once (per_stage x 9-row
-      dim theta-join, the Spark plan's own shape) — so the chained
-      WITH form expands linearly, not exponentially, under DuckDB's
-      CTE re-inlining;
-    * every stage body is a self-contained SELECT (nested WITH
-      allowed), so the staged twin can materialize each as a
-      CREATE TEMP TABLE verbatim for the 10x/100x replicas.
+    Modality signature stages read ``documents`` directly — a
+    per-asset signature is static, so joining the GLOBAL signature
+    table onto the survivor set yields the same keeper minima as
+    signaturing only survivors — and the audit tail aggregates
+    ``survival`` exactly once (per_stage x 9-row dim theta-join, the
+    Spark plan's own shape).  Every stage body is a self-contained
+    SELECT (nested WITH allowed).
     """
     from .llm import _PMH_BANDS, _PMH_N, _PMH_TAU_E6
     from .llm3 import _md5_u32_sql
@@ -1426,33 +1421,18 @@ def _p4_stages() -> list[tuple[str, str]]:
 
 
 def _p4_oracle() -> str:
-    """Chained single-statement form of the v4 twin (the driver
-    contract's oracle_sql)."""
     stages = _p4_stages()
     ctes = ",\n    ".join(
-        f"{name} AS ({body})" for name, body in stages[:-1]
+        f"{name} AS MATERIALIZED ({body})" for name, body in stages[:-1]
     )
     # the final body opens its own WITH — legal as a subquery, not
     # directly after the outer CTE list
     return f"\n    WITH {ctes}\n    SELECT * FROM ({stages[-1][1]})\n    "
 
 
-def _p4_oracle_staged() -> list[str]:
-    """Materialized-staging twin for the 10x/100x replicas: each
-    stage computed exactly once (the staged_oracle discipline,
-    core.py)."""
-    stages = _p4_stages()
-    return [
-        f"CREATE OR REPLACE TEMP TABLE {name} AS {body}"
-        for name, body in stages[:-1]
-    ] + [stages[-1][1]]
-
-
-
 @query(
     "curation_pipeline_v4",
     oracle=_p4_oracle(),
-    staged_oracle=_p4_oracle_staged(),
 )
 def curation_pipeline_v4(spark: SparkSession, sf: str) -> DataFrame:
     """The four-modality curation chain (VERDICT r12 #3) — the

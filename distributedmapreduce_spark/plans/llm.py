@@ -955,7 +955,7 @@ def _pmh_sig_sql() -> str:
                unnest(list_transform(range(1, len(ws) - 1),
                       i -> array_to_string(ws[i:i + 2], ' '))) AS s
         FROM toks WHERE len(ws) >= 3)),
-    sig AS (
+    sig AS MATERIALIZED (
       SELECT doc_id,
              list(DISTINCT {_md5_u32_sql('J', 's')}) AS hs,
              {sig_cols}
@@ -1378,7 +1378,7 @@ def _psh_sig_sql() -> str:
       SELECT doc_id, count(*) AS n,
              {cnt_cols}
       FROM words GROUP BY doc_id),
-    sig AS (
+    sig AS MATERIALIZED (
       SELECT doc_id, CAST({sig_terms} AS BIGINT) AS sig FROM agg)"""
 
 
@@ -1732,7 +1732,7 @@ def _mh_audit_oracle() -> str:
         " * 1e6) AS BIGINT)"
     )
     return f"""
-    WITH smp AS (
+    WITH smp AS MATERIALIZED (
       SELECT doc_id FROM documents
       ORDER BY {_md5_u32_sql('audit', 'doc_id')}, doc_id
       LIMIT {_AUDIT_SAMPLE}),
@@ -1741,13 +1741,13 @@ def _mh_audit_oracle() -> str:
              list_filter(string_split(lower(text), ' '), x -> x <> '')
                AS ws
       FROM documents),
-    sh AS (
+    sh AS MATERIALIZED (
       SELECT DISTINCT doc_id, s FROM (
         SELECT doc_id,
                unnest(list_transform(range(1, len(ws) - 1),
                       i -> array_to_string(ws[i:i + 2], ' '))) AS s
         FROM toks WHERE len(ws) >= 3)),
-    sig AS (
+    sig AS MATERIALIZED (
       SELECT doc_id,
              list(DISTINCT {_md5_u32_sql('J', 's')}) AS hs,
              {sig_cols}
@@ -1760,7 +1760,7 @@ def _mh_audit_oracle() -> str:
       SELECT DISTINCT least(a.doc_id, b.doc_id) AS doc_a,
                       greatest(a.doc_id, b.doc_id) AS doc_b
       FROM psh a JOIN csh b ON a.s = b.s AND a.doc_id <> b.doc_id),
-    truep AS (
+    truep AS MATERIALIZED (
       SELECT t.doc_a, t.doc_b
       FROM tp0 t
       JOIN sig x ON x.doc_id = t.doc_a
@@ -1773,7 +1773,7 @@ def _mh_audit_oracle() -> str:
       FROM bands a JOIN bands b
         ON a.band = b.band AND a.bucket = b.bucket
        AND a.doc_id < b.doc_id),
-    candi AS (
+    candi AS MATERIALIZED (
       SELECT DISTINCT c.doc_a, c.doc_b FROM (
         SELECT c.doc_a, c.doc_b FROM cand c
         JOIN smp p ON c.doc_a = p.doc_id
@@ -1803,104 +1803,9 @@ def _mh_audit_oracle() -> str:
     """
 
 
-def _mh_audit_oracle_staged() -> list[str]:
-    from .llm3 import _md5_u32_sql
-
-    sig_cols = ",\n             ".join(
-        f"min({_md5_u32_sql(str(i), 's')}) AS m{i}" for i in range(_PMH_N)
-    )
-    band_selects = "\n      UNION ALL\n      ".join(
-        f"SELECT doc_id, {b} AS band, "
-        f"concat(CAST(m{2 * b} AS VARCHAR), ':', "
-        f"CAST(m{2 * b + 1} AS VARCHAR)) AS bucket FROM mra_sig"
-        for b in range(_PMH_BANDS)
-    )
-    jac = (
-        "CAST(floor(len(list_intersect(x.hs, y.hs))"
-        " / CAST(len(x.hs) + len(y.hs)"
-        " - len(list_intersect(x.hs, y.hs)) AS DOUBLE)"
-        " * 1e6) AS BIGINT)"
-    )
-    return [
-        f"""CREATE OR REPLACE TEMP TABLE mra_sh AS
-    WITH toks AS (
-      SELECT doc_id,
-             list_filter(string_split(lower(text), ' '), x -> x <> '')
-               AS ws
-      FROM documents)
-    SELECT DISTINCT doc_id, s FROM (
-      SELECT doc_id,
-             unnest(list_transform(range(1, len(ws) - 1),
-                    i -> array_to_string(ws[i:i + 2], ' '))) AS s
-      FROM toks WHERE len(ws) >= 3)""",
-        f"""CREATE OR REPLACE TEMP TABLE mra_sig AS
-    SELECT doc_id,
-           list(DISTINCT {_md5_u32_sql('J', 's')}) AS hs,
-           {sig_cols}
-    FROM mra_sh GROUP BY doc_id""",
-        f"""CREATE OR REPLACE TEMP TABLE mra_smp AS
-    SELECT doc_id FROM documents
-    ORDER BY {_md5_u32_sql('audit', 'doc_id')}, doc_id
-    LIMIT {_AUDIT_SAMPLE}""",
-        f"""CREATE OR REPLACE TEMP TABLE mra_truep AS
-    WITH psh AS (SELECT sh.doc_id, sh.s FROM mra_sh sh
-                 JOIN mra_smp USING (doc_id)),
-    dfc AS (SELECT s FROM mra_sh GROUP BY s
-            HAVING count(*) <= {_AUDIT_DF_CAP}),
-    csh AS (SELECT sh.doc_id, sh.s FROM mra_sh sh JOIN dfc USING (s)),
-    tp0 AS (
-      SELECT DISTINCT least(a.doc_id, b.doc_id) AS doc_a,
-                      greatest(a.doc_id, b.doc_id) AS doc_b
-      FROM psh a JOIN csh b ON a.s = b.s AND a.doc_id <> b.doc_id)
-    SELECT t.doc_a, t.doc_b
-    FROM tp0 t
-    JOIN mra_sig x ON x.doc_id = t.doc_a
-    JOIN mra_sig y ON y.doc_id = t.doc_b
-    WHERE {jac} >= {_PMH_TAU_E6}""",
-        f"""CREATE OR REPLACE TEMP TABLE mra_candi AS
-    WITH bands AS (
-      {band_selects}),
-    cand AS (
-      SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-      FROM bands a JOIN bands b
-        ON a.band = b.band AND a.bucket = b.bucket
-       AND a.doc_id < b.doc_id)
-    SELECT DISTINCT c.doc_a, c.doc_b FROM (
-      SELECT c.doc_a, c.doc_b FROM cand c
-      JOIN mra_smp p ON c.doc_a = p.doc_id
-      UNION ALL
-      SELECT c.doc_a, c.doc_b FROM cand c
-      JOIN mra_smp p ON c.doc_b = p.doc_id) c""",
-        f"""
-    WITH ns AS (SELECT count(*) AS n_sample FROM mra_sig
-                JOIN mra_smp USING (doc_id)),
-    tc AS (SELECT count(*) AS true_pairs FROM mra_truep),
-    cc AS (SELECT count(*) AS cand_pairs FROM mra_candi),
-    tpc AS (
-      SELECT count(*) AS tp
-      FROM mra_truep t JOIN mra_candi c
-        ON t.doc_a = c.doc_a AND t.doc_b = c.doc_b)
-    SELECT CAST(ns.n_sample AS BIGINT) AS n_sample,
-           CAST(tc.true_pairs AS BIGINT) AS true_pairs,
-           CAST(cc.cand_pairs AS BIGINT) AS cand_pairs,
-           CAST(tpc.tp AS BIGINT) AS tp,
-           CAST(cc.cand_pairs - tpc.tp AS BIGINT) AS fp,
-           CAST(tc.true_pairs - tpc.tp AS BIGINT) AS fn,
-           CAST(CASE WHEN tc.true_pairs = 0 THEN 0
-                ELSE (tpc.tp * 1000000) // tc.true_pairs
-                END AS BIGINT) AS recall_e6,
-           CAST(CASE WHEN cc.cand_pairs = 0 THEN 0
-                ELSE (tpc.tp * 1000000) // cc.cand_pairs
-                END AS BIGINT) AS precision_e6
-    FROM ns CROSS JOIN tc CROSS JOIN cc CROSS JOIN tpc
-    """,
-    ]
-
-
 @query(
     "minhash_recall_audit",
     oracle=_mh_audit_oracle(),
-    staged_oracle=_mh_audit_oracle_staged(),
 )
 def minhash_recall_audit(spark: SparkSession, sf: str) -> DataFrame:
     """Sketch-quality audit of the MinHash-LSH configuration: ground
@@ -2040,67 +1945,44 @@ def minhash_recall_audit(spark: SparkSession, sf: str) -> DataFrame:
 # all map to a hash-green same-shape query.
 
 
-_PSH_CLS_TAIL = f"""
+def _psh_classes_oracle() -> str:
+    """Distinct-signature SimHash class pairs, with candidates from the
+    same 4x4-bit Hamming banding the Spark plan uses: two 16-bit
+    signatures within Hamming 3 agree on at least one of the four
+    4-bit blocks (pigeonhole), so the banded candidates hold every
+    true pair while staying bounded by the distinct-signature
+    population (|classes|^2 all-pairs is what a dense replica
+    signature space would cost)."""
+    bands = "\n      UNION ALL\n      ".join(
+        f"SELECT sig, {b} AS band, (sig // {1 << (4 * b)}) % 16 AS val "
+        "FROM cls"
+        for b in range(4)
+    )
+    return f"""{_psh_sig_sql()},
+    cls AS MATERIALIZED (
+      SELECT sig, count(*) AS n, min(doc_id) AS rep
+      FROM sig GROUP BY sig),
+    bands AS (
+      {bands}),
+    cand AS MATERIALIZED (
+      SELECT DISTINCT a.sig AS sig_a, b.sig AS sig_b
+      FROM bands a JOIN bands b
+        ON a.band = b.band AND a.val = b.val AND a.sig < b.sig
+      WHERE bit_count(xor(a.sig, b.sig)) <= {_PSH_HAM})
     SELECT CAST(a.sig AS BIGINT) AS ph_a, CAST(b.sig AS BIGINT) AS ph_b,
            CAST(bit_count(xor(a.sig, b.sig)) AS BIGINT) AS hamming,
            CAST(a.n AS BIGINT) AS n_a, CAST(b.n AS BIGINT) AS n_b,
            CAST(a.rep AS BIGINT) AS rep_a, CAST(b.rep AS BIGINT) AS rep_b,
            CAST(a.n * b.n AS BIGINT) AS n_asset_pairs
-    FROM cls a JOIN cls b ON a.sig < b.sig
-    WHERE bit_count(xor(a.sig, b.sig)) <= {_PSH_HAM}"""
-
-
-def _psh_classes_oracle() -> str:
-    """Distinct-signature SimHash class pairs.  The truth is ALL class
-    pairs within the Hamming threshold — the Spark side's 4x4-bit
-    banding is pigeonhole-complete for ham <= 3, so no banding appears
-    here (same structure as _phash_classes_oracle)."""
-    return f"""{_psh_sig_sql()},
-    cls AS (
-      SELECT sig, count(*) AS n, min(doc_id) AS rep
-      FROM sig GROUP BY sig)
-    {_PSH_CLS_TAIL}
+    FROM cand c
+    JOIN cls a ON a.sig = c.sig_a
+    JOIN cls b ON b.sig = c.sig_b
     """
-
-
-def _psh_classes_oracle_staged() -> list[str]:
-    """Chained form re-inlines the md5-signature CTE once per cls
-    reference and enumerates ALL class pairs; the staged form computes
-    the signature table ONCE and generates candidates through the same
-    4x4-bit Hamming banding the Spark plan uses (pigeonhole-complete
-    for ham <= 3, so the output is identical) — at a replica
-    scale the signature space is dense and the all-pairs form would be
-    |classes|^2."""
-    bands = "\n      UNION ALL\n      ".join(
-        f"SELECT sig, {b} AS band, (sig // {1 << (4 * b)}) % 16 AS val "
-        "FROM pshc_cls"
-        for b in range(4)
-    )
-    return [
-        f"CREATE OR REPLACE TEMP TABLE pshc_sig AS {_psh_sig_sql()}"
-        " SELECT * FROM sig",
-        "CREATE OR REPLACE TEMP TABLE pshc_cls AS "
-        "SELECT sig, count(*) AS n, min(doc_id) AS rep "
-        "FROM pshc_sig GROUP BY sig",
-        f"CREATE OR REPLACE TEMP TABLE pshc_cand AS "
-        f"WITH bands AS (\n      {bands})\n    "
-        "SELECT DISTINCT a.sig AS sig_a, b.sig AS sig_b "
-        "FROM bands a JOIN bands b "
-        "ON a.band = b.band AND a.val = b.val AND a.sig < b.sig "
-        f"WHERE bit_count(xor(a.sig, b.sig)) <= {_PSH_HAM}",
-        _PSH_CLS_TAIL.replace(
-            "FROM cls a JOIN cls b ON a.sig < b.sig",
-            "FROM pshc_cand c "
-            "JOIN pshc_cls a ON a.sig = c.sig_a "
-            "JOIN pshc_cls b ON b.sig = c.sig_b",
-        ),
-    ]
 
 
 @query(
     "dedup_simhash_classes",
     oracle=_psh_classes_oracle(),
-    staged_oracle=_psh_classes_oracle_staged(),
 )
 def dedup_simhash_classes(spark: SparkSession, sf: str) -> DataFrame:
     """SimHash near-dup CLASS pairs: the portable 16-bit md5
@@ -2152,7 +2034,7 @@ def _pmh_classes_oracle() -> str:
         " * 1e6) AS BIGINT)"
     )
     return f"""{_pmh_sig_sql()},
-    cls AS (
+    cls AS MATERIALIZED (
       SELECT {mcols}, count(*) AS n, min(doc_id) AS rep
       FROM sig GROUP BY {mcols}),
     bands AS (
@@ -2175,30 +2057,9 @@ def _pmh_classes_oracle() -> str:
     """
 
 
-def _pmh_classes_oracle_staged() -> list[str]:
-    """The chained form re-inlines the 8-permutation md5 signature
-    CTE once per cls/bands/x/y reference (8x at the 100x replica);
-    the staged form computes sig and cls once each."""
-    chained = _pmh_classes_oracle()
-    tail = chained[chained.index("bands AS (") :]
-    return [
-        f"CREATE OR REPLACE TEMP TABLE pmhc_sig AS {_pmh_sig_sql()}"
-        " SELECT * FROM sig",
-        "CREATE OR REPLACE TEMP TABLE pmhc_cls AS SELECT "
-        + ", ".join(f"m{i}" for i in range(_PMH_N))
-        + ", count(*) AS n, min(doc_id) AS rep FROM pmhc_sig GROUP BY "
-        + ", ".join(f"m{i}" for i in range(_PMH_N)),
-        "WITH "
-        + tail.replace("FROM cls", "FROM pmhc_cls")
-        .replace("JOIN cls", "JOIN pmhc_cls")
-        .replace("JOIN sig", "JOIN pmhc_sig"),
-    ]
-
-
 @query(
     "dedup_minhash_classes",
     oracle=_pmh_classes_oracle(),
-    staged_oracle=_pmh_classes_oracle_staged(),
 )
 def dedup_minhash_classes(spark: SparkSession, sf: str) -> DataFrame:
     """MinHash+LSH near-dup CLASS pairs: the portable 8-permutation
@@ -2256,11 +2117,28 @@ def dedup_minhash_classes(spark: SparkSession, sf: str) -> DataFrame:
 _JC_TAU_E6 = 500_000  # exact-Jaccard class-pair threshold, 1e-6 ticks
 
 
-def _jc_sets_sql() -> str:
-    """WITH-chain computing the per-doc sorted hashed-shingle sets
-    (doc_id, hss) — the shared head of the chained and staged
-    Jaccard-class oracles."""
+def _jac_classes_oracle() -> str:
+    """Distinct shingle-set class pairs with exact Jaccard >= tau,
+    with candidates from the same prefix filter the Spark plan uses:
+    two sets with Jaccard >= tau must share an element within each
+    side's first |s| - ceil(tau*|s|) + 1 elements under any global
+    canonical order (Bayardo et al., WWW'07), so the prefix-sharing
+    candidates hold every true pair.  All-pairs would be |classes|^2
+    list_intersects at a replica scale; the prefix-filtered form is
+    bounded by classes per shared prefix element, the same bound the
+    Spark side carries.  No CTE is MATERIALIZED: ``cls`` runs three
+    times inlined (within the discipline's bound), and DuckDB has no
+    row estimate for a materialized CTE, so it built the join hash
+    table on the candidates instead of the classes (2.3x slower at
+    sf0.1)."""
     from .llm3 import _md5_u32_sql
+
+    jac = (
+        "CAST(floor(len(list_intersect(a.hss, b.hss))"
+        " / CAST(len(a.hss) + len(b.hss)"
+        " - len(list_intersect(a.hss, b.hss)) AS DOUBLE)"
+        " * 1e6) AS BIGINT)"
+    )
 
     return f"""
     WITH toks AS (
@@ -2276,73 +2154,33 @@ def _jc_sets_sql() -> str:
     sets AS (
       SELECT doc_id,
              list_sort(list(DISTINCT {_md5_u32_sql('J', 's')})) AS hss
-      FROM sh GROUP BY doc_id)"""
-
-
-_JC_JAC = (
-    "CAST(floor(len(list_intersect(a.hss, b.hss))"
-    " / CAST(len(a.hss) + len(b.hss)"
-    " - len(list_intersect(a.hss, b.hss)) AS DOUBLE)"
-    " * 1e6) AS BIGINT)"
-)
-
-_JC_CLS_TAIL = f"""
-    SELECT CAST(a.rep AS BIGINT) AS rep_a, CAST(b.rep AS BIGINT) AS rep_b,
-           {_JC_JAC} AS jac_e6,
-           CAST(a.n AS BIGINT) AS n_a, CAST(b.n AS BIGINT) AS n_b,
-           CAST(a.n * b.n AS BIGINT) AS n_doc_pairs
-    FROM cls a JOIN cls b ON a.rep < b.rep
-    WHERE {_JC_JAC} >= {_JC_TAU_E6}"""
-
-
-def _jac_classes_oracle() -> str:
-    """Distinct shingle-set class pairs with exact Jaccard >= tau.
-    The truth enumerates ALL class pairs (bounded by the
-    distinct-content population); the Spark side's prefix filter is
-    candidate-complete by the standard all-pairs theorem (Bayardo et
-    al., WWW'07: two sets with Jaccard >= tau must share an element
-    within each side's first |s| - ceil(tau*|s|) + 1 elements under
-    any global canonical order), so no filter appears here."""
-    return f"""{_jc_sets_sql()},
+      FROM sh GROUP BY doc_id),
     cls AS (
       SELECT hss, count(*) AS n, min(doc_id) AS rep
-      FROM sets GROUP BY hss)
-    {_JC_CLS_TAIL}
+      FROM sets GROUP BY hss),
+    pref AS (
+      SELECT rep,
+             unnest(hss[1:CAST(len(hss)
+               - ((len(hss) * {_JC_TAU_E6} + 999999) // 1000000) + 1
+               AS BIGINT)]) AS h
+      FROM cls),
+    cand AS (
+      SELECT DISTINCT a.rep AS rep_a, b.rep AS rep_b
+      FROM pref a JOIN pref b ON a.h = b.h AND a.rep < b.rep)
+    SELECT CAST(a.rep AS BIGINT) AS rep_a, CAST(b.rep AS BIGINT) AS rep_b,
+           {jac} AS jac_e6,
+           CAST(a.n AS BIGINT) AS n_a, CAST(b.n AS BIGINT) AS n_b,
+           CAST(a.n * b.n AS BIGINT) AS n_doc_pairs
+    FROM cand c
+    JOIN cls a ON a.rep = c.rep_a
+    JOIN cls b ON b.rep = c.rep_b
+    WHERE {jac} >= {_JC_TAU_E6}
     """
-
-
-def _jac_classes_oracle_staged() -> list[str]:
-    """Stages the shingle-set head once, and generates candidates
-    through the SAME prefix filter the Spark plan uses (provably
-    candidate-complete — Bayardo et al., WWW'07 — so the output is
-    identical to the chained all-pairs form).  At a replica scale the
-    all-pairs form is |classes|^2 with a list_intersect per pair; the
-    prefix-filtered form is bounded by classes-per-shared-prefix-
-    element, the same bound the Spark side carries."""
-    return [
-        f"CREATE OR REPLACE TEMP TABLE jcc_cls AS {_jc_sets_sql()}"
-        " SELECT hss, count(*) AS n, min(doc_id) AS rep"
-        " FROM sets GROUP BY hss",
-        "CREATE OR REPLACE TEMP TABLE jcc_cand AS "
-        "WITH pref AS ("
-        " SELECT rep, unnest(hss[1:CAST("
-        f" len(hss) - ((len(hss) * {_JC_TAU_E6} + 999999) // 1000000) + 1"
-        " AS BIGINT)]) AS h FROM jcc_cls)"
-        " SELECT DISTINCT a.rep AS rep_a, b.rep AS rep_b"
-        " FROM pref a JOIN pref b ON a.h = b.h AND a.rep < b.rep",
-        _JC_CLS_TAIL.replace(
-            "FROM cls a JOIN cls b ON a.rep < b.rep",
-            "FROM jcc_cand c "
-            "JOIN jcc_cls a ON a.rep = c.rep_a "
-            "JOIN jcc_cls b ON b.rep = c.rep_b",
-        ),
-    ]
 
 
 @query(
     "dedup_jaccard_classes",
     oracle=_jac_classes_oracle(),
-    staged_oracle=_jac_classes_oracle_staged(),
 )
 def dedup_jaccard_classes(spark: SparkSession, sf: str) -> DataFrame:
     """Exact n-gram-Jaccard near-dup CLASS pairs with prefix-filter

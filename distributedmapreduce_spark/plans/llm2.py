@@ -331,17 +331,17 @@ def _pivf_oracle() -> str:
       SELECT greatest({_PIVF_K}, least({_PIVF_K_CAP}, count(*) // 128))
                AS k
       FROM embeddings),
-    pos AS (
+    pos AS MATERIALIZED (
       SELECT vec_id, i - 1 AS i,
              CAST(floor(CAST(embedding[i] AS DOUBLE) * 1e4 + 0.5)
                   AS BIGINT) AS qx
       FROM embeddings, unnest(range(1, len(embedding) + 1)) AS u(i)),
-    nrm AS (SELECT vec_id, CAST(sum(qx * qx) AS BIGINT) AS nn
+    nrm AS MATERIALIZED (SELECT vec_id, CAST(sum(qx * qx) AS BIGINT) AS nn
             FROM pos GROUP BY vec_id),
     cent AS (
       SELECT vec_id AS cid FROM embeddings
       ORDER BY {u}, vec_id LIMIT {kx}),
-    cos AS (
+    cos AS MATERIALIZED (
       SELECT a.vec_id, c.cid,
              CAST(floor(CAST(sum(a.qx * b.qx) AS BIGINT)
                         / (sqrt(CAST(any_value(na.nn) AS DOUBLE))

@@ -326,30 +326,32 @@ _PCA_US = 16  # direction coarsening divisor for the quadratic forms
 def _pi_chain() -> str:
     """Chained-CTE DuckDB twin of the integer power iteration, built
     programmatically so the SQL and the Spark driver loop share K and
-    the scale constants.  Two structural rules keep the plan linear
-    (DuckDB 1.0 inlines every CTE reference, so a scalar subquery per
-    normalization step would re-expand the whole upstream chain 3× per
-    iteration — exponential, observed as an fd-exhaustion blowup):
-    every max-normalization is a window function over its own CTE
-    (single upstream reference), and n rides along inside ``sx``
-    instead of a separate scalar CTE.  HUGEINT never reaches any
+    the scale constants.  Three structural rules keep the plan linear
+    (DuckDB inlines every non-MATERIALIZED CTE reference, so a scalar
+    subquery per normalization step would re-expand the whole upstream
+    chain 3× per iteration — exponential, observed as an
+    fd-exhaustion blowup): every max-normalization is a window
+    function over its own CTE (single upstream reference), n rides
+    along inside ``sx`` instead of a separate scalar CTE, and the
+    corpus ticks ``q``, the column sums ``sx`` and the normalized Gram
+    ``gn`` that every step reads are MATERIALIZED.  HUGEINT never reaches any
     expression: the Gram rescale divides by greatest(1, max|g| //
     2^30) instead of multiply-then-divide, bounding every product
     below 2^62."""
     sql = f"""
-    WITH q AS (
+    WITH q AS MATERIALIZED (
       SELECT vec_id, i - 1 AS i,
              CAST(floor(CAST(embedding[i] AS DOUBLE) * 1e4 + 0.5)
                   AS BIGINT) AS qx
       FROM embeddings, unnest(range(1, len(embedding) + 1)) AS u(i)),
-    sx AS (SELECT i, CAST(sum(qx) AS BIGINT) AS sx,
+    sx AS MATERIALIZED (SELECT i, CAST(sum(qx) AS BIGINT) AS sx,
                   CAST(count(*) AS BIGINT) AS n
            FROM q GROUP BY i),
     s AS (SELECT a.i AS i, b.i AS j, CAST(sum(a.qx * b.qx) AS BIGINT) AS s
           FROM q a JOIN q b USING (vec_id) GROUP BY 1, 2),
     g AS (SELECT s.i, s.j, sa.n * s.s - sa.sx * sb.sx AS g
           FROM s JOIN sx sa ON sa.i = s.i JOIN sx sb ON sb.i = s.j),
-    gn AS (SELECT i, j,
+    gn AS MATERIALIZED (SELECT i, j,
                   CASE WHEN g >= 0
                        THEN g // greatest(1, max(abs(g)) OVER () // {_PI_GS})
                        ELSE -((-g) // greatest(1, max(abs(g)) OVER ()

@@ -214,9 +214,10 @@ def _bloom_h(tag: str, col) -> F.Column:
 @query(
     "bloom_semi_join_audit",
     oracle=f"""
-    WITH build AS (
+    WITH build AS MATERIALIZED (
       SELECT c_custkey FROM customer WHERE c_acctbal > {_BLOOM_ACCTBAL}),
-    m AS (SELECT count(*) * {_BLOOM_BITS_PER_KEY} AS m FROM build),
+    m AS MATERIALIZED (
+      SELECT count(*) * {_BLOOM_BITS_PER_KEY} AS m FROM build),
     bits AS (
       SELECT DISTINCT {_bloom_h_sql('b1', 'c_custkey')} % (SELECT m FROM m) AS bit
       FROM build

@@ -26,7 +26,7 @@ from pyspark.sql import functions as F
 from ..functions.text import tokens
 from .core import query, t
 
-_BPE_K = 6  # learned merges; oracle CTE chain doubles per step (2^K)
+_BPE_K = 6  # learned merges
 
 
 def _bpe_chain_head(k_steps: int) -> "tuple[str, list[str]]":
@@ -38,12 +38,12 @@ def _bpe_chain_head(k_steps: int) -> "tuple[str, list[str]]":
     trainer SQL (``base.index(",\\n    mm_final AS")``), which made
     any whitespace change in the trainer an import-time ValueError.
 
-    Expansion discipline (ORACLE_PORTABILITY.md): DuckDB 1.0 inlines
-    every CTE reference, and each step references the exploded view of
-    the previous vocabulary twice (pair counts + rewrite) — 2^K
-    expansions of the vocabulary subtree, which is why K stays small
-    and the corpus is reduced to the (word, freq) vocab FIRST (the
-    doubled subtree is vocab-sized, never corpus-sized).  Merge
+    Expansion discipline (ORACLE_PORTABILITY.md): DuckDB inlines a
+    CTE at every reference, and each step references the exploded
+    view of the previous vocabulary twice (pair counts + rewrite), so
+    every vocabulary v_k is MATERIALIZED — computed once, not 2^K
+    times.  The corpus is reduced to the (word, freq) vocab FIRST, so
+    each step is vocab-sized, never corpus-sized.  Merge
     metadata rides along v_k as carried max() columns so the final
     SELECT touches only v_K (a scalar-subquery readback per step
     would re-expand the whole chain per step)."""
@@ -55,7 +55,7 @@ def _bpe_chain_head(k_steps: int) -> "tuple[str, list[str]]":
             FROM documents)
       WHERE regexp_matches(word, '^[a-z0-9]+$')
       GROUP BY word),
-    v0 AS (
+    v0 AS MATERIALIZED (
       SELECT word, freq,
              list_transform(range(1, strlen(word) + 1),
                             i -> substr(word, i, 1)) AS toks
@@ -91,7 +91,7 @@ def _bpe_chain_head(k_steps: int) -> "tuple[str, list[str]]":
              lag(mm AND off % 2 = 1, 1, false)
                OVER (PARTITION BY word ORDER BY i) AS prev_taken
       FROM y{k}),
-    v{k} AS (
+    v{k} AS MATERIALIZED (
       SELECT word, freq,
              list(CASE WHEN taken THEN ma || mb ELSE t END ORDER BY i)
                AS toks,
@@ -117,115 +117,6 @@ def _bpe_oracle(k_steps: int) -> str:
         for k in range(1, k_steps + 1)
     ]
     return sql + "\n    UNION ALL\n    ".join(selects)
-
-
-_BPE_V0_SQL = """
-    WITH w0 AS (
-      SELECT word, CAST(count(*) AS BIGINT) AS freq
-      FROM (SELECT unnest(list_filter(string_split(lower(text), ' '),
-                                      x -> x <> '')) AS word
-            FROM documents)
-      WHERE regexp_matches(word, '^[a-z0-9]+$')
-      GROUP BY word)
-    SELECT word, freq,
-           list_transform(range(1, strlen(word) + 1),
-                          i -> substr(word, i, 1)) AS toks
-    FROM w0"""
-
-
-def _bpe_step_sql(src: str, k: int, carry_prev: list[str]) -> str:
-    """One BPE training step reading the MATERIALIZED previous
-    vocabulary ``src`` — same SQL pieces as the chained _bpe_oracle
-    step, but the doubled reference (pair counts + rewrite) now hits a
-    temp TABLE, so expansion is O(1) per step instead of 2^K."""
-    carry_sel = "".join(f", {c}" for c in carry_prev)
-    carry_agg = "".join(f", max({c}) AS {c}" for c in carry_prev)
-    return f"""
-    WITH e AS (
-      SELECT word, freq, u.i AS i, toks[u.i] AS t,
-             CASE WHEN u.i < len(toks) THEN toks[u.i + 1] END AS tn
-             {carry_sel}
-      FROM {src}, unnest(range(1, len(toks) + 1)) AS u(i)),
-    pc AS (
-      SELECT t AS a, tn AS b, CAST(sum(freq) AS BIGINT) AS cnt
-      FROM e WHERE tn IS NOT NULL GROUP BY 1, 2),
-    m AS (SELECT a, b, cnt FROM pc
-          ORDER BY cnt DESC, a ASC, b ASC LIMIT 1),
-    x AS (
-      SELECT e.*, m.a AS ma, m.b AS mb, m.cnt AS mc,
-             (e.tn IS NOT NULL AND e.t = m.a AND e.tn = m.b) AS mm
-      FROM e, m),
-    y AS (
-      SELECT *,
-             i - coalesce(max(CASE WHEN NOT mm THEN i END)
-                            OVER (PARTITION BY word ORDER BY i
-                                  ROWS BETWEEN UNBOUNDED PRECEDING
-                                       AND 1 PRECEDING), 0) AS off
-      FROM x),
-    z AS (
-      SELECT *, (mm AND off % 2 = 1) AS taken,
-             lag(mm AND off % 2 = 1, 1, false)
-               OVER (PARTITION BY word ORDER BY i) AS prev_taken
-      FROM y)
-    SELECT word, freq,
-           list(CASE WHEN taken THEN ma || mb ELSE t END ORDER BY i)
-             AS toks,
-           max(ma) AS a{k}, max(mb) AS b{k}, max(mc) AS c{k}
-           {carry_agg}
-    FROM z WHERE NOT prev_taken
-    GROUP BY word, freq"""
-
-
-def _bpe_stages(k_steps: int) -> list[str]:
-    """CREATE TEMP TABLE materialization chain shared by both staged
-    BPE oracles (see Query.staged_oracle in plans/core.py)."""
-    stages = [f"CREATE OR REPLACE TEMP TABLE bpe_v0 AS {_BPE_V0_SQL}"]
-    carry: list[str] = []
-    for k in range(1, k_steps + 1):
-        stages.append(
-            f"CREATE OR REPLACE TEMP TABLE bpe_v{k} AS "
-            + _bpe_step_sql(f"bpe_v{k - 1}", k, carry)
-        )
-        carry += [f"a{k}", f"b{k}", f"c{k}"]
-    return stages
-
-
-def _bpe_oracle_staged(k_steps: int) -> list[str]:
-    carry = [
-        f"{x}{k}" for k in range(1, k_steps + 1) for x in ("a", "b", "c")
-    ]
-    final = (
-        "WITH mm_final AS (SELECT "
-        + ", ".join(f"max({c}) AS {c}" for c in carry)
-        + f" FROM bpe_v{k_steps})\n    "
-        + "\n    UNION ALL\n    ".join(
-            f"SELECT CAST({k} AS BIGINT) AS step, a{k} AS left, "
-            f"b{k} AS right, a{k} || b{k} AS merged, c{k} AS cnt "
-            f"FROM mm_final"
-            for k in range(1, k_steps + 1)
-        )
-    )
-    return _bpe_stages(k_steps) + [final]
-
-
-def _bpe_encode_oracle_staged(k_steps: int) -> list[str]:
-    final = f"""
-    WITH wlen AS (SELECT word, len(toks) AS n_toks FROM bpe_v{k_steps}),
-    dw AS (
-      SELECT doc_id, word
-      FROM (SELECT doc_id,
-                   unnest(list_filter(string_split(lower(text), ' '),
-                                      x -> x <> '')) AS word
-            FROM documents)
-      WHERE regexp_matches(word, '^[a-z0-9]+$'))
-    SELECT dw.doc_id,
-           CAST(count(*) AS BIGINT) AS n_words,
-           CAST(sum(wlen.n_toks) AS BIGINT) AS n_bpe_tokens,
-           CAST(sum(strlen(dw.word)) AS BIGINT) AS n_chars
-    FROM dw JOIN wlen USING (word)
-    GROUP BY dw.doc_id
-    """
-    return _bpe_stages(k_steps) + [final]
 
 
 def _merge_fold(toks, a: str, b: str):
@@ -313,7 +204,6 @@ def _train_merges(cur: DataFrame, k: int):
 @query(
     "bpe_train_merges",
     oracle=_bpe_oracle(_BPE_K),
-    staged_oracle=_bpe_oracle_staged(_BPE_K),
 )
 def bpe_train_merges(spark: SparkSession, sf: str) -> DataFrame:
     """Learn the first K=6 BPE merges over the documents corpus,
@@ -372,7 +262,6 @@ def _bpe_encode_oracle(k_steps: int) -> str:
 @query(
     "bpe_encode_token_counts",
     oracle=_bpe_encode_oracle(_BPE_K),
-    staged_oracle=_bpe_encode_oracle_staged(_BPE_K),
 )
 def bpe_encode_token_counts(spark: SparkSession, sf: str) -> DataFrame:
     """Apply the learned K=6 merges to tokenize the corpus: per
@@ -409,16 +298,17 @@ def bpe_encode_token_counts(spark: SparkSession, sf: str) -> DataFrame:
     )
 
 
-def _bpe_stream_final(vocab_tbl: str) -> str:
-    """Shared final SELECT of the corpus-stream encode oracle: the
-    ORDERED token stream per document, serialized to one string (the
+def _bpe_stream_oracle(k_steps: int) -> str:
+    """Corpus-stream encode oracle: the training chain up to v_K,
+    then the ORDERED token stream per document, serialized to one string (the
     no-nested-output convention, plans/textq.py:77).  Word positions
     come from a zipped double-unnest over the empty-filtered split —
     the same stream Spark's posexplode produces."""
-    return f"""
+    head, _ = _bpe_chain_head(k_steps)
+    return head + f""",
     wtok AS (SELECT word, array_to_string(toks, ' ') AS tok_str,
                     CAST(len(toks) AS BIGINT) AS n_toks
-             FROM {vocab_tbl}),
+             FROM v{k_steps}),
     dw AS (
       SELECT doc_id, pos, word
       FROM (SELECT doc_id,
@@ -437,21 +327,9 @@ def _bpe_stream_final(vocab_tbl: str) -> str:
     """
 
 
-def _bpe_stream_oracle(k_steps: int) -> str:
-    head, _ = _bpe_chain_head(k_steps)
-    return head + "," + _bpe_stream_final(f"v{k_steps}")
-
-
-def _bpe_stream_oracle_staged(k_steps: int) -> list[str]:
-    return _bpe_stages(k_steps) + [
-        "WITH" + _bpe_stream_final(f"bpe_v{k_steps}")
-    ]
-
-
 @query(
     "bpe_encode_corpus_stream",
     oracle=_bpe_stream_oracle(_BPE_K),
-    staged_oracle=_bpe_stream_oracle_staged(_BPE_K),
 )
 def bpe_encode_corpus_stream(spark: SparkSession, sf: str) -> DataFrame:
     """Corpus-wide BPE ENCODE throughput (VERDICT r08 next-round #5):
@@ -504,9 +382,10 @@ def bpe_encode_corpus_stream(spark: SparkSession, sf: str) -> DataFrame:
     )
 
 
-def _bpe_fertility_final(vocab_tbl: str) -> str:
-    return f"""
-    wlen AS (SELECT word, len(toks) AS n_toks FROM {vocab_tbl}),
+def _bpe_fertility_oracle(k_steps: int) -> str:
+    head, _ = _bpe_chain_head(k_steps)
+    return head + f""",
+    wlen AS (SELECT word, len(toks) AS n_toks FROM v{k_steps}),
     dw AS (
       SELECT lang, word
       FROM (SELECT lang,
@@ -525,21 +404,9 @@ def _bpe_fertility_final(vocab_tbl: str) -> str:
     """
 
 
-def _bpe_fertility_oracle(k_steps: int) -> str:
-    head, _ = _bpe_chain_head(k_steps)
-    return head + "," + _bpe_fertility_final(f"v{k_steps}")
-
-
-def _bpe_fertility_oracle_staged(k_steps: int) -> list[str]:
-    return _bpe_stages(k_steps) + [
-        "WITH " + _bpe_fertility_final(f"bpe_v{k_steps}").lstrip()
-    ]
-
-
 @query(
     "bpe_fertility_by_lang",
     oracle=_bpe_fertility_oracle(_BPE_K),
-    staged_oracle=_bpe_fertility_oracle_staged(_BPE_K),
 )
 def bpe_fertility_by_lang(spark: SparkSession, sf: str) -> DataFrame:
     """Tokenizer fertility per language: after the SAME K=6 BPE

@@ -38,12 +38,10 @@ from ..functions.vector import (
 )
 from ..operators.simjoin import pair_sides
 from .mlops import (
-    _KM_K_CTE,
     _KM_KX,
-    _KM_X_SQL,
+    _KM_T,
+    _km_chain_sql,
     _km_code_col,
-    _km_iter_sql,
-    _km_oracle_staged,
     _km_train,
 )
 
@@ -64,27 +62,25 @@ def _cos_e6(a, b) -> F.Column:
     return F.floor(_cosine(a, b) * 1_000_000).cast("long")
 
 
-def _km_asg_sql(x: str, m: str, k: str = _KM_KX) -> str:
-    """Per-vector cluster assignment under centroid table ``m`` —
-    the packed-argmin idiom of mlops._km_iter_sql (``k`` defaults to
-    the corpus-scaled km_k scalar the enclosing chain defines)."""
-    return f"""
-      SELECT vec_id, min(dist * {k} + j) % {k} AS cluster FROM (
+# per-vector cluster assignment under the trained centroids m{T} of
+# mlops._km_chain_sql, with its packed-argmin idiom
+_KM_ASG_SQL = f"""
+      SELECT vec_id, min(dist * {_KM_KX} + j) % {_KM_KX} AS cluster FROM (
         SELECT x.vec_id, m.j, sum((x.q - m.m) * (x.q - m.m)) AS dist
-        FROM {x} x JOIN {m} m USING (dim) GROUP BY 1, 2)
+        FROM x JOIN m{_KM_T} m USING (dim) GROUP BY 1, 2)
       GROUP BY 1"""
 
 
-def _semdedup_tail_sql(x: str, last_m: str) -> str:
-    """The SemDeDup prune SELECT given the quantized table and the
-    final centroid table (shared by the chained and staged oracles).
+def _semdedup_oracle() -> str:
+    """The shared Lloyd chain, then the SemDeDup prune SELECT.
 
     Two-phase argmin, NOT integer packing: min(keeper) first, then a
     join-back on the output-sized prune table recovers the keeper
     cosine.  An id-times-constant packing overflows int64 as soon as
-    ids reach the key-shifted replica range (~1e13) — the 10x staged
+    ids reach the key-shifted replica range (~1e13) — the 10x replica
     gate caught exactly that (ARITHMETIC_OVERFLOW under ANSI)."""
-    return f"""
+    return "WITH " + _km_chain_sql() + f""",
+    asg AS MATERIALIZED ({_KM_ASG_SQL})
     SELECT pr.pruned AS vec_id, CAST(pr.cluster AS BIGINT) AS cluster,
            pr.keeper,
            CAST(floor(list_dot_product(ka.e, kb.e)
@@ -92,8 +88,8 @@ def _semdedup_tail_sql(x: str, last_m: str) -> str:
              AS keeper_cos_e6
     FROM (
       SELECT bb.vec_id AS pruned, bb.cluster, min(aa.vec_id) AS keeper
-      FROM ({_km_asg_sql(x, last_m)}) aa
-      JOIN ({_km_asg_sql(x, last_m)}) bb
+      FROM asg aa
+      JOIN asg bb
         ON aa.cluster = bb.cluster AND aa.vec_id < bb.vec_id
       JOIN ({_NRM_SQL}) na ON na.vec_id = aa.vec_id
       JOIN ({_NRM_SQL}) nb ON nb.vec_id = bb.vec_id
@@ -104,45 +100,9 @@ def _semdedup_tail_sql(x: str, last_m: str) -> str:
     JOIN ({_NRM_SQL}) kb ON kb.vec_id = pr.pruned"""
 
 
-def _km_chain_sql() -> str:
-    """The shared Lloyd trainer as a CTE chain `km_k, x, m0, a1..m{T}`
-    — reused by the semdedup and IVF-PQ oracles (km_k is the
-    corpus-scaled K both engines compute from count(*))."""
-    from .mlops import _KM_T
-
-    parts = [
-        f"km_k AS ({_KM_K_CTE})",
-        f"x AS ({_KM_X_SQL})",
-        f"m0 AS (SELECT vec_id AS j, dim, q AS m FROM x"
-        f" WHERE vec_id < {_KM_KX})",
-    ]
-    for i in range(1, _KM_T + 1):
-        a, u = _km_iter_sql(i, "x", f"m{i - 1}")
-        parts.append(f"a{i} AS ({a})")
-        parts.append(f"m{i} AS ({u})")
-    return ",\n".join(parts)
-
-
-def _semdedup_oracle() -> str:
-    from .mlops import _KM_T
-
-    return (
-        "WITH " + _km_chain_sql() + _semdedup_tail_sql("x", f"m{_KM_T}")
-    )
-
-
-def _semdedup_oracle_staged() -> list[str]:
-    from .mlops import _KM_T
-
-    stages = _km_oracle_staged()[:-1]  # km_x .. km_m{T} temp tables
-    stages.append(_semdedup_tail_sql("km_x", f"km_m{_KM_T}"))
-    return stages
-
-
 @query(
     "semdedup_cluster_prune",
     oracle=_semdedup_oracle(),
-    staged_oracle=_semdedup_oracle_staged(),
 )
 def semdedup_cluster_prune(spark: SparkSession, sf: str) -> DataFrame:
     """SemDeDup (Abbas et al. 2023, arXiv:2303.09540): semantic dedup
@@ -152,16 +112,16 @@ def semdedup_cluster_prune(spark: SparkSession, sf: str) -> DataFrame:
     the keeper it dedups against is the smallest such id, recovered
     by a TWO-PHASE argmin — min(keeper) per pruned vector, then an
     output-sized join-back for the keeper cosine.  (The first draft
-    packed keeper·4e6 + cos into one BIGINT; the 10x staged gate
+    packed keeper·4e6 + cos into one BIGINT; the 10x replica gate
     killed it with ARITHMETIC_OVERFLOW the moment ids reached the
     key-shifted replica range — id-scaled packings are not
     100 TB-safe, two-phase aggregation is.)  Clusters come from the
     shared integer-tick Lloyd trainer (mlops._km_train — AUTO
     K ≈ count/128 clamped to [4, 4096], T=3, deterministic first-K
     init), so the DuckDB oracle replays the identical training chain
-    bit-for-bit (its km_k CTE computes the same K from count(*));
-    the staged twin materializes each Lloyd round once for the scales
-    where DuckDB's CTE re-inlining blows up (SCALE.md §9j).
+    bit-for-bit (its km_k CTE computes the same K from count(*)),
+    materializing each Lloyd round once so DuckDB's CTE re-inlining
+    cannot blow up at the replica scales (SCALE.md §9j).
 
     Scale: candidate volume is Σ_c |c|², bounded by cluster size —
     and K grows with the corpus (the paper's production shape,
@@ -270,17 +230,19 @@ _PQ_X_SQL = f"""
 
 # The one-round PQ trainer as a reusable CTE chain (pqx -> pqc0 ->
 # pqa1 -> pqc1) — shared by pq_codebook_sse and ann_ivfpq_topk so the
-# codebook semantics live in exactly one place (the BPE lesson).
+# codebook semantics live in exactly one place (the BPE lesson).  The
+# codebook stages are MATERIALIZED; the exploded vectors pqx stay
+# inline for the reason mlops._km_chain_sql gives for its x.
 _PQ_CHAIN_SQL = f"""pqx AS ({_PQ_X_SQL}),
-    pqc0 AS (SELECT m, vec_id AS j, d, q AS c FROM pqx
-             WHERE vec_id < {_PQ_KC}),
-    pqa1 AS (
+    pqc0 AS MATERIALIZED (SELECT m, vec_id AS j, d, q AS c FROM pqx
+                          WHERE vec_id < {_PQ_KC}),
+    pqa1 AS MATERIALIZED (
       SELECT vec_id, m, min(dist * {_PQ_KC} + j) % {_PQ_KC} AS j FROM (
         SELECT x.vec_id, x.m, c.j, sum((x.q - c.c) * (x.q - c.c)) AS dist
         FROM pqx x JOIN pqc0 c ON c.m = x.m AND c.d = x.d
         GROUP BY 1, 2, 3)
       GROUP BY 1, 2),
-    pqc1 AS (
+    pqc1 AS MATERIALIZED (
       SELECT x.m, a.j, x.d,
              (2 * sum(x.q) + count(*)) // (2 * count(*)) AS c
       FROM pqx x JOIN pqa1 a ON a.vec_id = x.vec_id AND a.m = x.m
@@ -292,39 +254,6 @@ _PQ_CODES_SQL = f"""
         FROM pqx x JOIN pqc1 c ON c.m = x.m AND c.d = x.d
         GROUP BY 1, 2, 3)
       GROUP BY 1, 2"""
-
-
-def _pq_stages() -> list[str]:
-    """The PQ trainer chain as materialized temp-table stages."""
-    out = []
-    for name, body in (
-        ("pqx", _PQ_X_SQL),
-        (
-            "pqc0",
-            f"SELECT m, vec_id AS j, d, q AS c FROM pqx"
-            f" WHERE vec_id < {_PQ_KC}",
-        ),
-        (
-            "pqa1",
-            f"""SELECT vec_id, m, min(dist * {_PQ_KC} + j) % {_PQ_KC} AS j
-            FROM (SELECT x.vec_id, x.m, c.j,
-                         sum((x.q - c.c) * (x.q - c.c)) AS dist
-                  FROM pqx x JOIN pqc0 c ON c.m = x.m AND c.d = x.d
-                  GROUP BY 1, 2, 3)
-            GROUP BY 1, 2""",
-        ),
-        (
-            "pqc1",
-            """SELECT x.m, a.j, x.d,
-                      (2 * sum(x.q) + count(*)) // (2 * count(*)) AS c
-            FROM pqx x JOIN pqa1 a
-              ON a.vec_id = x.vec_id AND a.m = x.m
-            GROUP BY 1, 2, 3""",
-        ),
-        ("pqcodes", _PQ_CODES_SQL),
-    ):
-        out.append(f"CREATE OR REPLACE TEMP TABLE {name} AS {body}")
-    return out
 
 
 def _pq_train(spark: SparkSession, sf: str, base: DataFrame | None = None):
@@ -398,7 +327,7 @@ def _pq_train(spark: SparkSession, sf: str, base: DataFrame | None = None):
     "pq_codebook_sse",
     oracle=f"""
     WITH {_PQ_CHAIN_SQL},
-    f AS ({_PQ_CODES_SQL})
+    f AS MATERIALIZED ({_PQ_CODES_SQL})
     SELECT CAST(f.m AS BIGINT) AS subspace,
            CAST(f.code % {_PQ_KC} AS BIGINT) AS code,
            CAST(count(*) AS BIGINT) AS n_members,
@@ -408,20 +337,6 @@ def _pq_train(spark: SparkSession, sf: str, base: DataFrame | None = None):
       ON l.m = f.m AND l.j = f.code % {_PQ_KC}
     GROUP BY 1, 2
     """,
-    staged_oracle=_pq_stages()
-    + [
-        f"""
-    SELECT CAST(f.m AS BIGINT) AS subspace,
-           CAST(f.code % {_PQ_KC} AS BIGINT) AS code,
-           CAST(count(*) AS BIGINT) AS n_members,
-           CAST(sum(f.code // {_PQ_KC}) AS BIGINT) AS sse,
-           CAST(min(l.l1) AS BIGINT) AS centroid_l1
-    FROM pqcodes f
-    JOIN (SELECT m, j, sum(c) AS l1 FROM pqc1 GROUP BY 1, 2) l
-      ON l.m = f.m AND l.j = f.code % {_PQ_KC}
-    GROUP BY 1, 2
-    """
-    ],
 )
 def pq_codebook_sse(spark: SparkSession, sf: str) -> DataFrame:
     """Product-quantization codebook (Jégou et al. 2011, "Product
@@ -489,7 +404,7 @@ def _mmr_stage_sql(i: int) -> str:
         f"SELECT vec_id FROM s{j}" for j in range(1, i)
     )
     return f"""
-    s{i} AS (
+    s{i} AS MATERIALIZED (
       SELECT c.vec_id, c.rel_e6, {i} AS pick,
              7 * c.rel_e6 - 3 * max(s.sim_e6) AS score_e6x10
       FROM cand c
@@ -510,9 +425,9 @@ def _mmr_oracle() -> str:
              CAST(floor(list_dot_product(n.e, q.e) / (n.nrm * q.nrm)
                         * 1000000) AS BIGINT) AS rel_e6
       FROM n CROSS JOIN q WHERE n.vec_id <> {_MMR_QV}),
-    cand AS (SELECT vec_id, rel_e6 FROM rel
+    cand AS MATERIALIZED (SELECT vec_id, rel_e6 FROM rel
              ORDER BY rel_e6 DESC, vec_id LIMIT {_MMR_CAND}),
-    sim AS (
+    sim AS MATERIALIZED (
       SELECT a.vec_id AS va, b.vec_id AS vb,
              CAST(floor(list_dot_product(na.e, nb.e)
                         / (na.nrm * nb.nrm) * 1000000) AS BIGINT)
@@ -520,8 +435,9 @@ def _mmr_oracle() -> str:
       FROM cand a JOIN cand b ON a.vec_id <> b.vec_id
       JOIN n na ON na.vec_id = a.vec_id
       JOIN n nb ON nb.vec_id = b.vec_id),
-    s1 AS (SELECT vec_id, rel_e6, 1 AS pick, 7 * rel_e6 AS score_e6x10
-           FROM cand ORDER BY rel_e6 DESC, vec_id LIMIT 1),
+    s1 AS MATERIALIZED (
+      SELECT vec_id, rel_e6, 1 AS pick, 7 * rel_e6 AS score_e6x10
+      FROM cand ORDER BY rel_e6 DESC, vec_id LIMIT 1),
     {stages}
     SELECT CAST(pick AS BIGINT) AS pick, vec_id, rel_e6,
            CAST(score_e6x10 AS BIGINT) AS score_e6x10
@@ -793,14 +709,22 @@ def _ivfpq_nprobe(k: int) -> int:
     return max(2, math.isqrt(k))
 
 
-def _ivfpq_tail_sql(x: str, last_m: str, asg: str, codes: str, pqx: str,
-                    pqc1: str, k: str = _KM_KX) -> str:
-    nprobe = _IVFPQ_NPROBE_SQL.format(k=k)
-    return f"""
+def _ivfpq_oracle() -> str:
+    # qd reads the query vectors from pqx (the same ticks, dim = m*D +
+    # d) rather than the inline x, whose reads the trainer chain and
+    # asg already bring to the CTE-discipline bound
+    nprobe = _IVFPQ_NPROBE_SQL.format(k=_KM_KX)
+    return (
+        "WITH "
+        + _km_chain_sql()
+        + f""",
+    asg AS MATERIALIZED ({_KM_ASG_SQL}),
+    {_PQ_CHAIN_SQL},
+    codes AS MATERIALIZED ({_PQ_CODES_SQL}),
     qd AS (
       SELECT x.vec_id AS qid, m.j,
              sum((x.q - m.m) * (x.q - m.m)) AS dist
-      FROM {x} x JOIN {last_m} m USING (dim)
+      FROM pqx x JOIN m{_KM_T} m ON m.dim = x.m * {_PQ_D} + x.d
       WHERE x.vec_id < {_IVFPQ_NQ} GROUP BY 1, 2),
     probes AS (
       SELECT qid, j AS cluster FROM (
@@ -811,13 +735,13 @@ def _ivfpq_tail_sql(x: str, last_m: str, asg: str, codes: str, pqx: str,
     lut AS (
       SELECT x.vec_id AS qid, c.m, c.j,
              sum((x.q - c.c) * (x.q - c.c)) AS ad
-      FROM {pqx} x JOIN {pqc1} c ON c.m = x.m AND c.d = x.d
+      FROM pqx x JOIN pqc1 c ON c.m = x.m AND c.d = x.d
       WHERE x.vec_id < {_IVFPQ_NQ} GROUP BY 1, 2, 3),
     cand AS (
       SELECT p.qid, a.vec_id
-      FROM probes p JOIN {asg} a ON a.cluster = p.cluster
+      FROM probes p JOIN asg a ON a.cluster = p.cluster
       WHERE a.vec_id <> p.qid),
-    jc AS (SELECT vec_id, m, code % {_PQ_KC} AS j FROM {codes}),
+    jc AS (SELECT vec_id, m, code % {_PQ_KC} AS j FROM codes),
     adc AS (
       SELECT c.qid, c.vec_id, CAST(sum(l.ad) AS BIGINT) AS adc
       FROM cand c
@@ -830,42 +754,12 @@ def _ivfpq_tail_sql(x: str, last_m: str, asg: str, codes: str, pqx: str,
                                        ORDER BY adc, vec_id) AS rn
           FROM adc)
     WHERE rn <= {_IVFPQ_TOPK}"""
-
-
-def _ivfpq_oracle() -> str:
-    from .mlops import _KM_T
-
-    return (
-        "WITH "
-        + _km_chain_sql()
-        + f",\n    asg AS ({_km_asg_sql('x', f'm{_KM_T}')}),\n    "
-        + _PQ_CHAIN_SQL
-        + f",\n    codes AS ({_PQ_CODES_SQL}),"
-        + _ivfpq_tail_sql("x", f"m{_KM_T}", "asg", "codes", "pqx", "pqc1")
     )
-
-
-def _ivfpq_oracle_staged() -> list[str]:
-    from .mlops import _KM_T
-
-    stages = _km_oracle_staged()[:-1] + _pq_stages()
-    stages.append(
-        "CREATE OR REPLACE TEMP TABLE ivf_asg AS "
-        + _km_asg_sql("km_x", f"km_m{_KM_T}")
-    )
-    stages.append(
-        "WITH "
-        + _ivfpq_tail_sql(
-            "km_x", f"km_m{_KM_T}", "ivf_asg", "pqcodes", "pqx", "pqc1"
-        ).lstrip()
-    )
-    return stages
 
 
 @query(
     "ann_ivfpq_topk",
     oracle=_ivfpq_oracle(),
-    staged_oracle=_ivfpq_oracle_staged(),
 )
 def ann_ivfpq_topk(spark: SparkSession, sf: str) -> DataFrame:
     """IVF-PQ approximate nearest neighbor (the FAISS IVFADC shape,

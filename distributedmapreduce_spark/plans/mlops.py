@@ -20,8 +20,7 @@ floats — so the engines agree even on negatives; the non-negative
 rule + explicit sign splits are kept anyway, because the naive-Python
 ``//`` replicas in the brute-force gate DO floor, and a published
 tick should mean floor-of-abs regardless of reader.)  The iterative
-query ships both the chained-CTE oracle (driver contract) and a
-materialized-staging twin.
+oracle materializes every Lloyd round (``_km_chain_sql``).
 
 Scale notes are per-query; the common theme is that every window in
 this module sits ABOVE a bucket- or calendar-keyed aggregate (score
@@ -88,32 +87,46 @@ _KM_X_SQL = """
     FROM embeddings, unnest(range(1, len(embedding) + 1)) AS u(i)"""
 
 
-def _km_iter_sql(
-    i: int, x: str, prev_m: str, k: str = _KM_KX
-) -> tuple[str, str]:
-    """One Lloyd round as (assignment CTE body, update CTE body).
+def _km_chain_sql() -> str:
+    """The shared Lloyd trainer as a CTE chain
+    `km_k, x, m0, a1, m1 .. a{T}, m{T}`.  Every stage but ``x`` is
+    MATERIALIZED, because each round reads the previous one more than
+    once (ORACLE_PORTABILITY.md CTE discipline).  The quantized
+    vectors ``x`` stay inline — one scan per read, 2T + 2 reads: DuckDB
+    has no row estimate for a materialized CTE, and with ``x``
+    materialized it built each round's join hash table on ``x`` and
+    probed it with the K-row centroids, serializing the N·K-row
+    distance pass (3x slower at the 10x replica).  km_k is the
+    corpus-scaled K both engines compute from count(*).
 
-    The argmin is encoded as min(dist*K + j): dist is identical-scale
+    Round i is an assignment ``a{i}`` and an update ``m{i}``.  The
+    argmin is encoded as min(dist*K + j): dist is identical-scale
     across j, so the packed integer's minimum IS the (dist, j)
     lexicographic minimum — deterministic tie-break on the smallest
-    cluster id with no min_by/arg_min portability risk.  ``k`` is the
-    K expression — the km_k scalar subquery on the auto path (the
-    default), or a literal for fixture pins.
-    """
-    a = f"""
+    cluster id with no min_by/arg_min portability risk."""
+    k = _KM_KX
+    parts = [
+        f"km_k AS MATERIALIZED ({_KM_K_CTE})",
+        f"x AS ({_KM_X_SQL})",
+        f"m0 AS MATERIALIZED (SELECT vec_id AS j, dim, q AS m FROM x"
+        f" WHERE vec_id < {k})",
+    ]
+    for i in range(1, _KM_T + 1):
+        parts.append(f"""a{i} AS MATERIALIZED (
       SELECT vec_id, min(dist * {k} + j) % {k} AS j FROM (
         SELECT x.vec_id, m.j, sum((x.q - m.m) * (x.q - m.m)) AS dist
-        FROM {x} x JOIN {prev_m} m USING (dim) GROUP BY 1, 2)
-      GROUP BY 1"""
-    u = f"""
+        FROM x JOIN m{i - 1} m USING (dim) GROUP BY 1, 2)
+      GROUP BY 1)""")
+        parts.append(f"""m{i} AS MATERIALIZED (
       SELECT a.j, x.dim,
              (2 * sum(x.q) + count(*)) // (2 * count(*)) AS m
-      FROM {x} x JOIN a{i} a USING (vec_id) GROUP BY 1, 2"""
-    return a, u
+      FROM x JOIN a{i} a USING (vec_id) GROUP BY 1, 2)""")
+    return ",\n".join(parts)
 
 
-def _km_final_sql(x: str, last_m: str, k: str = _KM_KX) -> str:
-    return f"""
+def _km_oracle() -> str:
+    k, last_m = _KM_KX, f"m{_KM_T}"
+    return "WITH " + _km_chain_sql() + f"""
     SELECT CAST(f.code % {k} AS BIGINT) AS cluster,
            CAST(count(*) AS BIGINT) AS n_members,
            CAST(sum(f.code // {k}) AS BIGINT) AS inertia,
@@ -121,45 +134,11 @@ def _km_final_sql(x: str, last_m: str, k: str = _KM_KX) -> str:
     FROM (
       SELECT vec_id, min(dist * {k} + j) AS code FROM (
         SELECT x.vec_id, m.j, sum((x.q - m.m) * (x.q - m.m)) AS dist
-        FROM {x} x JOIN {last_m} m USING (dim) GROUP BY 1, 2)
+        FROM x JOIN {last_m} m USING (dim) GROUP BY 1, 2)
       GROUP BY 1) f
     JOIN (SELECT j, sum(m) AS l1 FROM {last_m} GROUP BY j) l
       ON f.code % {k} = l.j
     GROUP BY 1"""
-
-
-def _km_oracle() -> str:
-    parts = [
-        f"km_k AS ({_KM_K_CTE})",
-        f"x AS ({_KM_X_SQL})",
-        f"m0 AS (SELECT vec_id AS j, dim, q AS m FROM x"
-        f" WHERE vec_id < {_KM_KX})",
-    ]
-    for i in range(1, _KM_T + 1):
-        a, u = _km_iter_sql(i, "x", f"m{i - 1}")
-        parts.append(f"a{i} AS ({a})")
-        parts.append(f"m{i} AS ({u})")
-    return (
-        "WITH " + ",\n".join(parts) + _km_final_sql("x", f"m{_KM_T}")
-    )
-
-
-def _km_oracle_staged() -> list[str]:
-    stages = [
-        f"CREATE OR REPLACE TEMP TABLE km_k AS {_KM_K_CTE}",
-        f"CREATE OR REPLACE TEMP TABLE km_x AS {_KM_X_SQL}",
-        f"CREATE OR REPLACE TEMP TABLE km_m0 AS SELECT vec_id AS j,"
-        f" dim, q AS m FROM km_x WHERE vec_id < {_KM_KX}",
-    ]
-    for i in range(1, _KM_T + 1):
-        a, u = _km_iter_sql(i, "km_x", f"km_m{i - 1}")
-        stages.append(f"CREATE OR REPLACE TEMP TABLE km_a{i} AS {a}")
-        stages.append(
-            "CREATE OR REPLACE TEMP TABLE "
-            f"km_m{i} AS {u.replace(f'a{i} a', f'km_a{i} a')}"
-        )
-    stages.append(_km_final_sql("km_x", f"km_m{_KM_T}"))
-    return stages
 
 
 def _km_quantized(spark: SparkSession, sf: str) -> DataFrame:
@@ -379,7 +358,6 @@ def _km_train(
 @query(
     "kmeans_int8_lloyd",
     oracle=_km_oracle(),
-    staged_oracle=_km_oracle_staged(),
 )
 def kmeans_int8_lloyd(spark: SparkSession, sf: str) -> DataFrame:
     """Lloyd k-means (AUTO K ≈ count/128 clamped to [4, 4096], T=3
@@ -791,11 +769,12 @@ def isotonic_calibration(spark: SparkSession, sf: str) -> DataFrame:
 _CORESET_TOPK = 3
 
 
-def _coreset_final_sql(x: str, last_m: str, k: str = _KM_KX) -> str:
+def _coreset_oracle() -> str:
     # cluster/dist unpack in an inner subquery so the window
     # partitions by a NAMED column (a scalar subquery inside
     # PARTITION BY is not portable)
-    return f"""
+    k = _KM_KX
+    return "WITH " + _km_chain_sql() + f"""
     SELECT cluster, rnk, vec_id, dist FROM (
       SELECT cluster,
              CAST(row_number() OVER (
@@ -809,39 +788,15 @@ def _coreset_final_sql(x: str, last_m: str, k: str = _KM_KX) -> str:
         FROM (
           SELECT vec_id, min(dist * {k} + j) AS code FROM (
             SELECT x.vec_id, m.j, sum((x.q - m.m) * (x.q - m.m)) AS dist
-            FROM {x} x JOIN {last_m} m USING (dim) GROUP BY 1, 2)
+            FROM x JOIN m{_KM_T} m USING (dim) GROUP BY 1, 2)
           GROUP BY 1))) r
     WHERE rnk <= {_CORESET_TOPK}
     """
 
 
-def _coreset_oracle() -> str:
-    parts = [
-        f"km_k AS ({_KM_K_CTE})",
-        f"x AS ({_KM_X_SQL})",
-        f"m0 AS (SELECT vec_id AS j, dim, q AS m FROM x"
-        f" WHERE vec_id < {_KM_KX})",
-    ]
-    for i in range(1, _KM_T + 1):
-        a, u = _km_iter_sql(i, "x", f"m{i - 1}")
-        parts.append(f"a{i} AS ({a})")
-        parts.append(f"m{i} AS ({u})")
-    return (
-        "WITH " + ",\n".join(parts)
-        + _coreset_final_sql("x", f"m{_KM_T}")
-    )
-
-
-def _coreset_oracle_staged() -> list[str]:
-    stages = _km_oracle_staged()[:-1]
-    stages.append(_coreset_final_sql("km_x", f"km_m{_KM_T}"))
-    return stages
-
-
 @query(
     "coreset_centroid_topk",
     oracle=_coreset_oracle(),
-    staged_oracle=_coreset_oracle_staged(),
 )
 def coreset_centroid_topk(spark: SparkSession, sf: str) -> DataFrame:
     """Coreset selection: after the SAME Lloyd training as

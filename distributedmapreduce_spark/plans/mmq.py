@@ -884,7 +884,7 @@ def _audiofp_classes_oracle() -> str:
       SELECT doc_id AS asset_id, 1 + (doc_id % 2) AS nc,
              64 + (doc_id % 64) AS nf, doc_id % 256 AS d
       FROM documents WHERE doc_id % 3 = 2),
-    samp AS (
+    samp AS MATERIALIZED (
       SELECT asset_id, nf, fx.f,
              ((d + 2 * fx.f * nc) % 256)
              + 256 * ((d + 2 * fx.f * nc + 1) % 256)

@@ -20,6 +20,7 @@ import subprocess  # noqa: E402
 from plan_fingerprint import (  # noqa: E402
     diff_plans,
     normalize_plan,
+    rdd_leaf_plans,
     replica_fingerprint,
 )
 
@@ -124,3 +125,27 @@ def test_plan_diff_gate_on_hand_written_dumps(tmp_path):
         capture_output=True, text=True,
     )
     assert same.returncode == 0 and "0 changed" in same.stdout
+
+
+def test_plan_diff_lists_rdd_leaf_queries(tmp_path):
+    """A checkpoint/collected-RDD leaf hides the lineage behind it, so
+    --diff names every query whose plan has one, changed or not,
+    without failing the gate for it."""
+    parent = {"cp": "Project [x#]\n+- LogicalRDD [x#], false",
+              "plain": "Range (0, 1)",
+              "moved": "Filter (y# > 1)\n+- LogicalRDD [y#], false"}
+    change = {**parent,
+              "moved": "Filter (y# > 2)\n+- LogicalRDD [y#], false"}
+    assert rdd_leaf_plans(change) == ["cp", "moved"]
+    pa, ch = tmp_path / "parent.json", tmp_path / "change.json"
+    pa.write_text(json.dumps(parent))
+    ch.write_text(json.dumps(change))
+    out = subprocess.run(
+        [sys.executable, _TOOL, "--diff", str(pa), str(ch),
+         "--expect", "moved"],
+        capture_output=True, text=True,
+    )
+    assert out.returncode == 0, out.stdout + out.stderr
+    tail = out.stdout.split("checkpoint/RDD leaf", 1)[1]
+    assert "  cp\n" in tail and "  moved\n" in tail
+    assert "plain" not in out.stdout

@@ -17,21 +17,24 @@ These tests pin the whole oracle corpus against both classes.
 
 from __future__ import annotations
 
+import json
+
 import duckdb
 import pytest
 
 from distributedmapreduce_spark.plans.core import EVENTS_US
 from distributedmapreduce_spark.plans.registry import get_registry
+from distributedmapreduce_spark.sources.testdata import TABLES
 
 SF_DIR = "/root/testdata/sf0.01"
-TABLES = (
-    "region nation customer supplier part orders lineitem events "
-    "documents embeddings"
-).split()
 
 # types whose cross-version behavior (pandas mapping, precision,
 # comparison semantics) is not stable enough for a bit-identical gate
 FRAGILE = ("HUGEINT", "UHUGEINT", "TIMESTAMP_NS", "TIME_NS")
+
+# most times a CTE body may run once DuckDB inlines it at every
+# reference (ORACLE_PORTABILITY.md "CTE expansion discipline")
+MAX_CTE_RUNS = 8
 
 
 @pytest.fixture(scope="module")
@@ -118,3 +121,100 @@ def test_hugeint_double_cast_matches_python(con):
             " AS DOUBLE)"
         ).fetchone()[0]
         assert got == float(v), (v, got)
+
+
+def _cte_runs(sql: str) -> dict[str, int]:
+    """How many times each CTE body of ``sql`` runs when DuckDB
+    inlines every non-MATERIALIZED CTE at each reference: a reference
+    from the main query counts once, one from inside another inlined
+    CTE counts as often as that CTE's body runs, and a MATERIALIZED
+    body runs once per run of its WITH.  Parse-only: reads DuckDB's
+    own parse tree from json_serialize_sql.  A recursive CTE's
+    reference to itself is not counted."""
+    raw = duckdb.connect().execute(
+        "SELECT json_serialize_sql(?::VARCHAR)", [sql]
+    ).fetchone()[0]
+    tree = json.loads(raw)
+    assert not tree["error"], tree.get("error_message")
+    runs: dict[tuple[str, int], int] = {}
+
+    def walk(node, mult: int, scope: dict) -> None:
+        if isinstance(node, list):
+            for x in node:
+                walk(x, mult, scope)
+            return
+        if not isinstance(node, dict):
+            return
+        if node.get("type") == "CTE_NODE":
+            # wrapper DuckDB adds per MATERIALIZED CTE; its child
+            # carries the whole WITH list again
+            walk(node["child"], mult, scope)
+            return
+        if node.get("type") == "BASE_TABLE" and not node["schema_name"]:
+            key = scope.get(node["table_name"])
+            if key is not None:
+                runs[key] += mult
+            return
+        ctes = (node.get("cte_map") or {}).get("map") or []
+        if not ctes:
+            for v in node.values():
+                walk(v, mult, scope)
+            return
+        keys = [(c["key"], id(c)) for c in ctes]
+        for key in keys:
+            runs[key] = 0
+        walk(
+            {k: v for k, v in node.items() if k != "cte_map"},
+            mult,
+            {**scope, **{k[0]: k for k in keys}},
+        )
+        # a CTE sees only the CTEs before it, so walking the list
+        # backwards settles each count before its body is walked
+        for i in reversed(range(len(ctes))):
+            value = ctes[i]["value"]
+            if value["materialized"] == "CTE_MATERIALIZE_ALWAYS":
+                runs[keys[i]] = min(runs[keys[i]], mult)
+            walk(
+                value["query"],
+                runs[keys[i]],
+                {**scope, **{k[0]: k for k in keys[:i]}},
+            )
+
+    for statement in tree["statements"]:
+        walk(statement["node"], 1, {})
+    out: dict[str, int] = {}
+    for (name, _), n in runs.items():
+        out[name] = max(out.get(name, 0), n)
+    return out
+
+
+def test_cte_run_count_sees_reinlining():
+    """The counter behind the guard below: a 4-round chain whose
+    round k reads round k-1 twice runs its base 2^4 times inlined,
+    once materialized."""
+    rounds = ",".join(
+        f"c{k} AS{{mat}} (SELECT a.x FROM c{k - 1} a, c{k - 1} b)"
+        for k in range(1, 5)
+    )
+    chain = "WITH c0 AS{mat} (SELECT 1 AS x)," + rounds + " SELECT * FROM c4"
+    assert _cte_runs(chain.format(mat="")) == {
+        "c0": 16, "c1": 8, "c2": 4, "c3": 2, "c4": 1
+    }
+    assert set(_cte_runs(chain.format(mat=" MATERIALIZED")).values()) == {1}
+
+
+def test_no_cte_body_reinlined_past_limit():
+    """Every registered oracle keeps each CTE body to at most
+    MAX_CTE_RUNS runs: a CTE read by several consumers, or an
+    iterative chain whose round k reads round k-1 more than once, is
+    marked MATERIALIZED.  Inlined, such chains grow as 2^K and ran out
+    of memory at the 10x/100x replicas."""
+    offenders = {}
+    for name, q in get_registry().items():
+        if not q.oracle:
+            continue
+        runs = _cte_runs(q.oracle)
+        worst = max(runs, key=runs.get, default=None)
+        if worst is not None and runs[worst] > MAX_CTE_RUNS:
+            offenders[name] = (worst, runs[worst])
+    assert not offenders, offenders

@@ -24,12 +24,9 @@ import pytest
 from pyspark.sql import types as T
 
 from distributedmapreduce_spark.plans.registry import get_registry
+from distributedmapreduce_spark.sources.testdata import TABLES
 
 SF_DIR = "/root/testdata/sf0.001"
-TABLES = (
-    "region nation customer supplier part orders lineitem events "
-    "documents embeddings"
-).split()
 
 # pandas sort_values dies on list/dict cells; structs arrive as dicts
 _NESTED_SPARK = (T.ArrayType, T.MapType, T.StructType)

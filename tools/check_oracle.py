@@ -23,11 +23,9 @@ import time
 _REPO_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, _REPO_ROOT)
 
+from distributedmapreduce_spark.sources.testdata import TABLES  # noqa: E402
+
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
-TABLES = (
-    "region nation customer supplier part orders lineitem events "
-    "documents embeddings"
-).split()
 
 
 def _canon(v):
@@ -142,23 +140,6 @@ def main() -> int:
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{path}')")
 
     qs, oracles = E.queries(), E.oracle_sql()
-    # SPARK_GRAFT_STAGED=1: for queries carrying a staged_oracle
-    # (iterative chains — BPE, LPA), run the materialized-staging twin
-    # instead of the chained-CTE string: all but the last statement
-    # are CREATE TEMP TABLE stages (computed once each), the last is
-    # the compared SELECT.  This is what extends 100x-replica hash
-    # evidence to the family whose chained oracles die of DuckDB CTE
-    # re-inlining (VERDICT r05 next-round #6).
-    staged: dict[str, list[str]] = {}
-    if os.environ.get("SPARK_GRAFT_STAGED") == "1":
-        from distributedmapreduce_spark.plans.core import registry
-
-        staged = {
-            n: q.staged_oracle
-            for n, q in registry().items()
-            if q.staged_oracle
-        }
-        print(f"staged-oracle mode: {sorted(staged)}")
     failures = []
     n_run = 0
     for name, fn in sorted(qs.items()):
@@ -207,12 +188,7 @@ def main() -> int:
             }
             continue
         try:
-            if name in staged:
-                for stmt in staged[name][:-1]:
-                    con.execute(stmt)
-                res = con.sql(staged[name][-1])
-            else:
-                res = con.sql(oracles[name])
+            res = con.sql(oracles[name])
             dcols = res.columns
             drows = res.fetchall()
         except Exception as e:  # noqa: BLE001

@@ -8,7 +8,7 @@ data it ran on, the compare harness) — so each query gets a key:
 
     sha256( normalized analyzed logical plan at sf0.001
           + sha256 of the defining module's source file
-          + oracle SQL (+ staged-oracle statements)
+          + oracle SQL
           + sha256 of tools/check_oracle.py )
 
 and the sweep separately fingerprints the REPLICA (sorted table file
@@ -37,7 +37,7 @@ Why each component:
   pickling pattern), recurses, and folds the sorted closure's file
   hashes into the key.  session.py (runtime config) is folded into
   every key unconditionally;
-- oracle + staged-oracle text: a changed oracle is a changed claim;
+- oracle text: a changed oracle is a changed claim;
 - check_oracle.py: the gate itself (canonicalization, float rounding)
   is part of what a verdict means.
 
@@ -56,7 +56,10 @@ Usage:
 checkouts and save the outputs.  ``--diff`` reads two such dumps,
 prints the changed, added and removed queries, and exits 1 when any
 of them is not named after ``--expect`` (a query whose build failed
-dumps as null, so a new failure shows as a change).
+dumps as null, so a new failure shows as a change).  It also lists,
+changed or not, the queries whose plan reads a checkpoint or
+collected RDD (a ``LogicalRDD`` leaf): the plan cannot show what
+built that leaf, so those need the oracle battery instead.
 """
 
 from __future__ import annotations
@@ -231,12 +234,10 @@ def query_fingerprints(names=None, fp_sf: str = FP_SF) -> dict[str, str | None]:
                 if os.path.exists(src)
                 else "<?>"
             )
-            staged = "\n--\n".join(q.staged_oracle or [])
             out[name] = _sha(
                 f"{plan}\n==SRC=={src_cache[src]}\n==DEPS=={clo}"
                 f"\n==SESSION=={session_sha}\n==ORACLE=="
-                f"{q.oracle or ''}\n==STAGED=={staged}"
-                f"\n==HARNESS=={harness}"
+                f"{q.oracle or ''}\n==HARNESS=={harness}"
             )[:24]
         except Exception as e:  # noqa: BLE001 — degrade to fresh run
             print(f"fingerprint FAILED for {name}: {e!r}", file=sys.stderr)
@@ -278,7 +279,6 @@ def query_components(names=None, fp_sf: str = FP_SF) -> dict[str, dict]:
             plan = normalize_plan(
                 df._jdf.queryExecution().analyzed().toString(), fp_sf
             )
-            staged = "\n--\n".join(q.staged_oracle or [])
             pyeval = bool(_PYEVAL_RE.search(plan))
             # any scan outside the <SF> dir (warehouse/index/tmp
             # artifacts) means fn() ran engine code whose semantics
@@ -290,7 +290,7 @@ def query_components(names=None, fp_sf: str = FP_SF) -> dict[str, dict]:
             out[name] = {
                 "sem": _sha(
                     f"{plan}\n==ORACLE=={q.oracle or ''}"
-                    f"\n==STAGED=={staged}\n==HARNESS=={harness}"
+                    f"\n==HARNESS=={harness}"
                 )[:24],
                 "seedable": not pyeval and not nonsf,
             }
@@ -337,6 +337,13 @@ def diff_plans(parent: dict, change: dict) -> dict[str, list[str]]:
     }
 
 
+def rdd_leaf_plans(plans: dict) -> list[str]:
+    """Queries whose dumped plan has a ``LogicalRDD`` leaf — a
+    localCheckpoint or a driver-built frame whose lineage the plan
+    string does not show, so an equal plan proves nothing about it."""
+    return sorted(q for q, p in plans.items() if p and "LogicalRDD" in p)
+
+
 def _diff_main(args: list[str]) -> int:
     if len(args) < 2 or args[2:3] not in ([], ["--expect"]):
         print("usage: --diff PARENT.json CHANGE.json [--expect QUERY ...]",
@@ -352,6 +359,12 @@ def _diff_main(args: list[str]) -> int:
     for kind, names in diff.items():
         for q in names:
             print(f"{kind}: {q}" + ("" if q in expect else "  UNEXPECTED"))
+    opaque = rdd_leaf_plans(dumps[1])
+    if opaque:
+        print("checkpoint/RDD leaf, not covered by this diff"
+              " (run the oracle battery):")
+        for q in opaque:
+            print(f"  {q}")
     print(
         f"{len(dumps[1])} queries; "
         + ", ".join(f"{len(v)} {k}" for k, v in diff.items())

@@ -38,7 +38,7 @@ and RECORDS them so the artifact itself shows what was not run):
   exact-copy duplication makes the true near-dup pair set quadratic
   in the duplication factor (§9e) — the DuckDB oracle side is
   inherently O(pairs), not an engine defect (each family carries a
-  10× staged pass + a pair-growth audit instead);
+  10× replica pass + a pair-growth audit instead);
 - `approx_quantiles`: sketch exactness is mathematically bounded by
   n <= accuracy (ORACLE_PORTABILITY.md) — the compare itself is
   invalid past that n;
@@ -71,9 +71,9 @@ EXCLUDE: dict[str, str] = {
     "minhash_index_incremental_update": "minhash-family delta-bucket pair expansion is quadratic on an exact-copy replica (SCALE.md §9x)",
     "approx_quantiles": "sketch exactness bounded by n <= accuracy (ORACLE_PORTABILITY.md)",
     "math_functions": "output == input cardinality (60M rows); gate canonicalization-bound, 10x-verified (SCALE.md §9f)",
-    "triangle_count_copurchase": "oracle-side triangle enumeration (edge x edge self-join) spills past the box's disk at 100x — Spark side completes (67,200 rows in ~15 min); 10x staged-verified (SCALE.md §12d)",
+    "triangle_count_copurchase": "oracle-side triangle enumeration (edge x edge self-join) spills past the box's disk at 100x — Spark side completes (67,200 rows in ~15 min); 10x-verified (SCALE.md §12d)",
     "dedup_phash_images": "oracle is a deliberate ALL-PAIRS enumeration (complete truth for the banded plan) — O(n^2) in image count, infeasible at 100x; 10x-verified, pair growth audited (phash16/phash64 rows in tools/pair_growth.py)",
-    "dedup_jaccard_classes": "the suffix-perturbed replica makes every replica a DISTINCT near-dup class, so the TRUE class-pair answer (and the measured prefix fan-out: jaccard_cls_prefix row, 66M at 10x, alpha 2.0) grows ~C(replicas,2) by construction — growth in the answer, not the algorithm; 10x hash-green (248,740 rows), staged==chained completeness pinned by hypothesis (SCALE.md §15d)",
+    "dedup_jaccard_classes": "the suffix-perturbed replica makes every replica a DISTINCT near-dup class, so the TRUE class-pair answer (and the measured prefix fan-out: jaccard_cls_prefix row, 66M at 10x, alpha 2.0) grows ~C(replicas,2) by construction — growth in the answer, not the algorithm; 10x hash-green (248,740 rows) with the since-removed staged twin; the single-statement oracle exhausted ~20 GB of spill disk at 10x under a 5 GB DuckDB limit; prefix-filter completeness pinned by the hypothesis brute-force property in tests/test_text_classes.py (SCALE.md §15d)",
 }
 
 # Known-heavy ORACLES get a process to themselves with an individual
@@ -194,7 +194,6 @@ def main() -> int:
 
     env = dict(os.environ)
     env["SPARK_GRAFT_SF_DIR"] = sf_dir
-    env["SPARK_GRAFT_STAGED"] = "1"  # staged oracles for iteratives
 
     merged: dict[str, dict] = {
         f"__excluded__{n}": {"reason": why} for n, why in excluded.items()
